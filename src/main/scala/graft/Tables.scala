@@ -139,11 +139,13 @@ object Tables {
     * a null `session` NPE'd inside `resetMetrics` at the start of a
     * `count()` — an internal Spark race that 60 stress iterations plus the
     * full verify/bench matrix could not reproduce. The retry re-invokes the
-    * thunk, which builds a FRESH Dataset/QueryExecution/physical plan, so a
-    * transiently-corrupt plan instance cannot persist into the second
-    * attempt; the action must therefore be idempotent and re-buildable
-    * (convergence counts are). Anything else — including a second internal
-    * error — still fails loudly. */
+    * thunk, so the thunk must BUILD its Dataset, not capture a built one: a
+    * Dataset's `queryExecution` (and its `toRdd`) is a cached lazy val, so
+    * only a Dataset made inside the thunk gets a fresh QueryExecution and
+    * physical plan, and a transiently-corrupt plan instance cannot persist
+    * into the second attempt. The action must be idempotent (counts are).
+    * Anything else — including a second internal error — still fails
+    * loudly. */
   def retryInternalOnce[T](what: String)(thunk: => T): T =
     try thunk catch {
       case e: org.apache.spark.SparkException

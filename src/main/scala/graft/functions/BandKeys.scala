@@ -1,13 +1,11 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types.{ArrayType, DataType, FloatType, IntegerType}
+import org.apache.spark.sql.types.{ArrayType, FloatType, IntegerType}
 
 /** Fused banded sign-LSH signature over an `array<float>` embedding: all
-  * [[BandKeys.Bands]]×[[BandKeys.BandBits]] hyperplane projections in ONE
+  * [[BandWalk.Bands]]×[[BandWalk.BandBits]] hyperplane projections in ONE
   * primitive loop inside WholeStageCodegen, returning the packed per-band
   * keys as `array<int>`.
   *
@@ -15,26 +13,47 @@ import org.apache.spark.sql.types.{ArrayType, DataType, FloatType, IntegerType}
   * (128 separate `when(vec_dot(emb, ±1-plane) >= 0, bit)` sums — measured
   * ~600µs/row interpreted vs ~5µs/row fused): projection j is the
   * sequential double fold Σ_d emb(d)·w(j,d) with the deterministic ±1
-  * weight bank of [[BandKeys.weight]] (Knuth multiplicative mix — the
+  * weight bank of [[BandWalk.weight]] (Knuth multiplicative mix — the
   * DuckDB oracle inlines the same constants); bit i of band b is set when
   * the projection of hyperplane j = b·BandBits+i is ≥ 0. Arrays whose
-  * length differs from [[BandKeys.Dim]] yield all-zero keys (the
+  * length differs from [[BandWalk.Dim]] yield all-zero keys (the
   * `vec_dot` length-mismatch → null → no-bit behavior of the declarative
   * form); null elements contribute 0 to the fold.
   */
-case class BandKeys(child: Expression) extends UnaryExpression {
+case class BandKeys(child: Expression)
+    extends WalkExpression(ArrayType(FloatType), ArrayType(IntegerType, containsNull = false)) {
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(FloatType, _) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"band_keys requires array<float>, got ${other.simpleString}")
+  override protected def walk(in: Any): Any =
+    BandWalk.keys(in.asInstanceOf[ArrayData])
+
+  override protected def genWalk(c: String): String =
+    s"graft.functions.BandWalk.keys($c)"
+
+  override protected def withNewChildInternal(newChild: Expression): BandKeys =
+    copy(child = newChild)
+
+  override def prettyName: String = "band_keys"
+}
+
+/** [[BandKeys]]'s walker and its constants. */
+object BandWalk {
+  val Dim = 64
+  val Bands = 16
+  val BandBits = 8
+
+  /** ±1 weight of hyperplane j at dimension d: Knuth multiplicative mix of
+    * the flat index, bit 13 — shared verbatim with the SQL twin
+    * (SignLsh.sqlBandKeys inlines these as literals). */
+  def weight(j: Int, d: Int): Int = {
+    val h = ((j.toLong * Dim + d) * 2654435761L) % 4294967296L
+    if (((h >> 13) & 1L) == 0L) 1 else -1
   }
 
-  override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
+  /** Flat (j·Dim+d) weight table. */
+  private val Weights: Array[Double] =
+    Array.tabulate(Bands * BandBits * Dim)(k => weight(k / Dim, k % Dim).toDouble)
 
-  override protected def nullSafeEval(a: Any): Any = {
-    import BandKeys._
-    val x = a.asInstanceOf[ArrayData]
+  def keys(x: ArrayData): GenericArrayData = {
     val keys = new Array[Int](Bands)
     if (x.numElements() == Dim) {
       var b = 0
@@ -58,60 +77,4 @@ case class BandKeys(child: Expression) extends UnaryExpression {
     }
     new GenericArrayData(keys)
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, x => {
-      import BandKeys._
-      val w = ctx.addReferenceObj("bandWeights", Weights, "double[]")
-      val keys = ctx.freshName("keys")
-      val b = ctx.freshName("b")
-      val i = ctx.freshName("i")
-      val d = ctx.freshName("d")
-      val j = ctx.freshName("j")
-      val acc = ctx.freshName("acc")
-      val key = ctx.freshName("key")
-      s"""
-         |int[] $keys = new int[$Bands];
-         |if ($x.numElements() == $Dim) {
-         |  for (int $b = 0; $b < $Bands; $b++) {
-         |    int $key = 0;
-         |    for (int $i = 0; $i < $BandBits; $i++) {
-         |      int $j = $b * $BandBits + $i;
-         |      double $acc = 0.0;
-         |      for (int $d = 0; $d < $Dim; $d++) {
-         |        if (!$x.isNullAt($d)) {
-         |          $acc += (double) $x.getFloat($d) * $w[$j * $Dim + $d];
-         |        }
-         |      }
-         |      if ($acc >= 0) $key |= 1 << ($BandBits - 1 - $i);
-         |    }
-         |    $keys[$b] = $key;
-         |  }
-         |}
-         |${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData($keys);
-       """.stripMargin
-    })
-
-  override protected def withNewChildInternal(newChild: Expression): BandKeys =
-    copy(child = newChild)
-
-  override def prettyName: String = "band_keys"
-}
-
-object BandKeys {
-  val Dim = 64
-  val Bands = 16
-  val BandBits = 8
-
-  /** ±1 weight of hyperplane j at dimension d: Knuth multiplicative mix of
-    * the flat index, bit 13 — shared verbatim with the SQL twin
-    * (SignLsh.sqlBandKeys inlines these as literals). */
-  def weight(j: Int, d: Int): Int = {
-    val h = ((j.toLong * Dim + d) * 2654435761L) % 4294967296L
-    if (((h >> 13) & 1L) == 0L) 1 else -1
-  }
-
-  /** Flat (j·Dim+d) weight table used by eval and codegen. */
-  val Weights: Array[Double] =
-    Array.tabulate(Bands * BandBits * Dim)(k => weight(k / Dim, k % Dim).toDouble)
 }

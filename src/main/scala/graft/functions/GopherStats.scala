@@ -1,10 +1,8 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.util.GenericArrayData
-import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
+import org.apache.spark.sql.types.{ArrayType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Fused per-row counters for the Gopher rule funnel
@@ -153,35 +151,25 @@ object GopherWalk { // public: generated Java calls the static forwarders
   }
 }
 
-private[functions] abstract class GopherStatsExpression extends UnaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires string, got ${other.simpleString}")
-  }
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  /** Static forwarder the generated Java calls. */
-  protected def walker: String
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.GopherWalk.$walker($c);")
-}
-
 /** `gopher_word_stats(lowered)` — [n_words, word_chars, n_alpha, n_stop]. */
-case class GopherWordStats(child: Expression) extends GopherStatsExpression {
-  override protected def nullSafeEval(input: Any): Any =
-    GopherWalk.wordStats(input.asInstanceOf[UTF8String])
-  override protected def walker: String = "wordStats"
+case class GopherWordStats(child: Expression)
+    extends WalkExpression(StringType, ArrayType(LongType, containsNull = false)) {
+  override protected def walk(in: Any): Any =
+    GopherWalk.wordStats(in.asInstanceOf[UTF8String])
+  override protected def genWalk(c: String): String =
+    s"graft.functions.GopherWalk.wordStats($c)"
   override protected def withNewChildInternal(newChild: Expression): GopherWordStats =
     copy(child = newChild)
   override def prettyName: String = "gopher_word_stats"
 }
 
 /** `gopher_line_stats(raw)` — [n_lines, n_bullet, n_ell_line, n_hash, n_ell]. */
-case class GopherLineStats(child: Expression) extends GopherStatsExpression {
-  override protected def nullSafeEval(input: Any): Any =
-    GopherWalk.lineStats(input.asInstanceOf[UTF8String])
-  override protected def walker: String = "lineStats"
+case class GopherLineStats(child: Expression)
+    extends WalkExpression(StringType, ArrayType(LongType, containsNull = false)) {
+  override protected def walk(in: Any): Any =
+    GopherWalk.lineStats(in.asInstanceOf[UTF8String])
+  override protected def genWalk(c: String): String =
+    s"graft.functions.GopherWalk.lineStats($c)"
   override protected def withNewChildInternal(newChild: Expression): GopherLineStats =
     copy(child = newChild)
   override def prettyName: String = "gopher_line_stats"

@@ -2,7 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.{Column, SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
 import org.apache.spark.sql.expressions.Aggregator
 
 /** Registration surface for graft's custom Catalyst functions.
@@ -21,66 +21,42 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
 object GraftFunctions {
 
-  private[functions] val descriptors = Seq(
-    (new FunctionIdentifier("vec_dot"),
-      new ExpressionInfo(classOf[VecDot].getName, "vec_dot"),
-      (children: Seq[Expression]) => VecDot(children.head, children(1)): Expression),
-    (new FunctionIdentifier("simhash64"),
-      new ExpressionInfo(classOf[SimHash64].getName, "simhash64"),
-      (children: Seq[Expression]) => SimHash64(children.head): Expression),
-    (new FunctionIdentifier("md5_words"),
-      new ExpressionInfo(classOf[Md5Words].getName, "md5_words"),
-      (children: Seq[Expression]) => Md5Words(children.head): Expression),
-    (new FunctionIdentifier("band_keys"),
-      new ExpressionInfo(classOf[BandKeys].getName, "band_keys"),
-      (children: Seq[Expression]) => BandKeys(children.head): Expression),
-    (new FunctionIdentifier("syllable_sum"),
-      new ExpressionInfo(classOf[SyllableSum].getName, "syllable_sum"),
-      (children: Seq[Expression]) => SyllableSum(children.head): Expression),
-    (new FunctionIdentifier("md5_prefix32"),
-      new ExpressionInfo(classOf[Md5Prefix32].getName, "md5_prefix32"),
-      (children: Seq[Expression]) => Md5Prefix32(children.head): Expression),
-    (new FunctionIdentifier("token_count"),
-      new ExpressionInfo(classOf[TokenCount].getName, "token_count"),
-      (children: Seq[Expression]) => TokenCount(children.head): Expression),
-    (new FunctionIdentifier("stop_count"),
-      new ExpressionInfo(classOf[StopCount].getName, "stop_count"),
-      (children: Seq[Expression]) => StopCount(children.head): Expression),
-    (new FunctionIdentifier("punct_count"),
-      new ExpressionInfo(classOf[PunctCount].getName, "punct_count"),
-      (children: Seq[Expression]) => PunctCount(children.head): Expression),
-    (new FunctionIdentifier("gopher_word_stats"),
-      new ExpressionInfo(classOf[GopherWordStats].getName, "gopher_word_stats"),
-      (children: Seq[Expression]) => GopherWordStats(children.head): Expression),
-    (new FunctionIdentifier("gopher_line_stats"),
-      new ExpressionInfo(classOf[GopherLineStats].getName, "gopher_line_stats"),
-      (children: Seq[Expression]) => GopherLineStats(children.head): Expression),
-    (new FunctionIdentifier("pq_assign"),
-      new ExpressionInfo(classOf[PqAssign].getName, "pq_assign"),
-      (children: Seq[Expression]) =>
-        PqAssign(children.head, children(1)): Expression),
-    (new FunctionIdentifier("gram_buckets"),
-      new ExpressionInfo(classOf[GramBuckets].getName, "gram_buckets"),
-      (children: Seq[Expression]) => {
-        val m = children(1) match {
-          case org.apache.spark.sql.catalyst.expressions.Literal(v: Long, _) => v
-          case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, _) =>
-            v.toLong
-          case other => throw new IllegalArgumentException(
-            s"gram_buckets(s, m): m must be an integer literal, got $other")
-        }
-        GramBuckets(children.head, m): Expression
-      }),
-    (new FunctionIdentifier("minhash_sig"),
-      new ExpressionInfo(classOf[MinHashSig].getName, "minhash_sig"),
-      (children: Seq[Expression]) => {
-        val n = children(1) match {
-          case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, _) => v
-          case other => throw new IllegalArgumentException(
-            s"minhash_sig(arr, n): n must be an int literal, got $other")
-        }
-        MinHashSig(children.head, n): Expression
-      }))
+  /** Registry entry for `name`, described by the expression class built. */
+  private def fn[E <: Expression](name: String)(build: Seq[Expression] => E)(
+      implicit ct: scala.reflect.ClassTag[E]) =
+    (new FunctionIdentifier(name), new ExpressionInfo(ct.runtimeClass.getName, name),
+      build: Seq[Expression] => Expression)
+
+  private[graft] val descriptors = Seq(
+    fn("vec_dot")(c => VecDot(c.head, c(1))),
+    fn("simhash64")(c => SimHash64(c.head)),
+    fn("md5_words")(c => Md5Words(c.head)),
+    fn("band_keys")(c => BandKeys(c.head)),
+    fn("syllable_sum")(c => SyllableSum(c.head)),
+    fn("md5_prefix32")(c => Md5Prefix32(c.head)),
+    fn("token_count")(c => TokenCount(c.head)),
+    fn("stop_count")(c => StopCount(c.head)),
+    fn("punct_count")(c => PunctCount(c.head)),
+    fn("gopher_word_stats")(c => GopherWordStats(c.head)),
+    fn("gopher_line_stats")(c => GopherLineStats(c.head)),
+    fn("pq_assign")(c => PqAssign(c.head, c(1))),
+    fn("gram_buckets") { c =>
+      val m = c(1) match {
+        case Literal(v: Long, _) => v
+        case Literal(v: Int, _) => v.toLong
+        case other => throw new IllegalArgumentException(
+          s"gram_buckets(s, m): m must be an integer literal, got $other")
+      }
+      GramBuckets(c.head, m)
+    },
+    fn("minhash_sig") { c =>
+      val n = c(1) match {
+        case Literal(v: Int, _) => v
+        case other => throw new IllegalArgumentException(
+          s"minhash_sig(arr, n): n must be an int literal, got $other")
+      }
+      MinHashSig(c.head, n)
+    })
 
   /** Idempotently register graft functions (and the [[VecDotRewrite]]
     * optimizer rule) on a live session. */
@@ -94,99 +70,76 @@ object GraftFunctions {
         spark.experimental.extraOptimizations :+ VecDotRewrite
   }
 
-  /** `vec_dot` as a Column (via the registry, so plans serialize cleanly). */
-  def vecDot(spark: SparkSession, a: Column, b: Column): Column = {
+  /** `name(args)` through the registry (so plans serialize cleanly),
+    * registering graft functions first. */
+  private def call(spark: SparkSession, name: String, args: Column*): Column = {
     register(spark)
-    org.apache.spark.sql.functions.call_function("vec_dot", a, b)
+    org.apache.spark.sql.functions.call_function(name, args: _*)
   }
+
+  /** `vec_dot` as a Column. */
+  def vecDot(spark: SparkSession, a: Column, b: Column): Column =
+    call(spark, "vec_dot", a, b)
 
   /** `band_keys` as a Column (fused banded sign-LSH signature). */
-  def bandKeys(spark: SparkSession, emb: Column): Column = {
-    register(spark)
-    org.apache.spark.sql.functions.call_function("band_keys", emb)
-  }
+  def bandKeys(spark: SparkSession, emb: Column): Column =
+    call(spark, "band_keys", emb)
 
   /** `md5_words` as a Column: array(word1, word2) of 60-bit md5 words. */
-  def md5Words(spark: SparkSession, s: Column): Column = {
-    register(spark)
-    org.apache.spark.sql.functions.call_function("md5_words", s)
-  }
+  def md5Words(spark: SparkSession, s: Column): Column =
+    call(spark, "md5_words", s)
 
   /** `simhash64` as a Column. */
-  def simHash64(spark: SparkSession, hashes: Column): Column = {
-    register(spark)
-    org.apache.spark.sql.functions.call_function("simhash64", hashes)
-  }
+  def simHash64(spark: SparkSession, hashes: Column): Column =
+    call(spark, "simhash64", hashes)
 
   /** `syllable_sum` as a Column: Σ max(1, vowel-group runs) over a token
     * array — the fused readability syllable counter. */
-  def syllableSum(spark: SparkSession, words: Column): Column = {
-    register(spark)
-    org.apache.spark.sql.functions.call_function("syllable_sum", words)
-  }
+  def syllableSum(spark: SparkSession, words: Column): Column =
+    call(spark, "syllable_sum", words)
 
   /** `md5_prefix32` as a Column: the unsigned 32-bit md5 prefix as a long
     * (`conv(substring(md5(s), 1, 8), 16, 10)` fused into one digest). */
-  def md5Prefix32(spark: SparkSession, s: Column): Column = {
-    register(spark)
-    org.apache.spark.sql.functions.call_function("md5_prefix32", s)
-  }
+  def md5Prefix32(spark: SparkSession, s: Column): Column =
+    call(spark, "md5_prefix32", s)
 
   /** `gram_buckets` as a Column: hashed unigram+bigram md5-prefix32
     * buckets of an already-lowercased string, one byte-walk. */
-  def gramBuckets(spark: SparkSession, lowered: Column, m: Long): Column = {
-    register(spark)
-    org.apache.spark.sql.functions.call_function("gram_buckets", lowered,
-      org.apache.spark.sql.functions.lit(m))
-  }
+  def gramBuckets(spark: SparkSession, lowered: Column, m: Long): Column =
+    call(spark, "gram_buckets", lowered, org.apache.spark.sql.functions.lit(m))
 
   /** `token_count` as a Column: size of the canonical token split over an
     * already-lowercased string, without building the array. */
-  def tokenCount(spark: SparkSession, lowered: Column): Column = {
-    register(spark)
-    org.apache.spark.sql.functions.call_function("token_count", lowered)
-  }
+  def tokenCount(spark: SparkSession, lowered: Column): Column =
+    call(spark, "token_count", lowered)
 
   /** `stop_count` as a Column: quality-scorer stopword matches over an
     * already-lowercased string. */
-  def stopCount(spark: SparkSession, lowered: Column): Column = {
-    register(spark)
-    org.apache.spark.sql.functions.call_function("stop_count", lowered)
-  }
+  def stopCount(spark: SparkSession, lowered: Column): Column =
+    call(spark, "stop_count", lowered)
 
   /** `punct_count` as a Column: `[^a-z0-9\s']` code points over raw text. */
-  def punctCount(spark: SparkSession, raw: Column): Column = {
-    register(spark)
-    org.apache.spark.sql.functions.call_function("punct_count", raw)
-  }
+  def punctCount(spark: SparkSession, raw: Column): Column =
+    call(spark, "punct_count", raw)
 
   /** `gopher_word_stats` as a Column: [n_words, word_chars, n_alpha,
     * n_stop] over an already-lowercased string, one byte-walk. */
-  def gopherWordStats(spark: SparkSession, lowered: Column): Column = {
-    register(spark)
-    org.apache.spark.sql.functions.call_function("gopher_word_stats", lowered)
-  }
+  def gopherWordStats(spark: SparkSession, lowered: Column): Column =
+    call(spark, "gopher_word_stats", lowered)
 
   /** `gopher_line_stats` as a Column: [n_lines, n_bullet, n_ell_line,
     * n_hash, n_ell] over raw text, one byte-walk. */
-  def gopherLineStats(spark: SparkSession, raw: Column): Column = {
-    register(spark)
-    org.apache.spark.sql.functions.call_function("gopher_line_stats", raw)
-  }
+  def gopherLineStats(spark: SparkSession, raw: Column): Column =
+    call(spark, "gopher_line_stats", raw)
 
   /** `pq_assign` as a Column: cid of the nearest codeword in `books`
     * (collected per-subspace codebook) to `sub`, ties → lowest cid. */
-  def pqAssign(spark: SparkSession, sub: Column, books: Column): Column = {
-    register(spark)
-    org.apache.spark.sql.functions.call_function("pq_assign", sub, books)
-  }
+  def pqAssign(spark: SparkSession, sub: Column, books: Column): Column =
+    call(spark, "pq_assign", sub, books)
 
   /** `minhash_sig` as a Column (n must be a literal). */
-  def minHashSig(spark: SparkSession, hashes: Column, n: Int): Column = {
-    register(spark)
-    org.apache.spark.sql.functions.call_function("minhash_sig", hashes,
-      org.apache.spark.sql.functions.lit(n))
-  }
+  def minHashSig(spark: SparkSession, hashes: Column, n: Int): Column =
+    call(spark, "minhash_sig", hashes, org.apache.spark.sql.functions.lit(n))
 
   /** Exact micro-unit centroid Aggregator (SURVEY §2.9 vector-centroid
     * UDAF): accumulates each component as a scale-6 decimal long (the same

@@ -1,10 +1,9 @@
 package graft.functions
 
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.util.GenericArrayData
-import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
+import org.apache.spark.sql.types.{ArrayType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Fused hashed unigram+bigram feature extraction for the DSIR posting
@@ -32,26 +31,18 @@ import org.apache.spark.unsafe.types.UTF8String
   * faithful to the `concat`; consumers aggregate, so order never
   * matters downstream. */
 case class GramBuckets(child: Expression, buckets: Long)
-    extends UnaryExpression {
+    extends WalkExpression(StringType, ArrayType(LongType, containsNull = false)) {
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType if buckets > 0 => TypeCheckResult.TypeCheckSuccess
-    case StringType => TypeCheckResult.TypeCheckFailure(
+  override def checkInputDataTypes(): TypeCheckResult =
+    if (buckets > 0) super.checkInputDataTypes()
+    else TypeCheckResult.TypeCheckFailure(
       s"gram_buckets requires a positive bucket count, got $buckets")
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"gram_buckets requires string, got ${other.simpleString}")
-  }
 
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
+  override protected def walk(in: Any): Any =
+    GramWalk.buckets(in.asInstanceOf[UTF8String], buckets)
 
-  override protected def nullSafeEval(input: Any): Any =
-    new GenericArrayData(
-      GramWalk.buckets(input.asInstanceOf[UTF8String], buckets))
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"""${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData(
-         |  graft.functions.GramWalk.buckets($c, ${buckets}L));""".stripMargin)
+  override protected def genWalk(c: String): String =
+    s"graft.functions.GramWalk.buckets($c, ${buckets}L)"
 
   override protected def withNewChildInternal(newChild: Expression): GramBuckets =
     copy(child = newChild)
@@ -76,7 +67,7 @@ object GramWalk {
 
   /** Unigram+bigram md5-prefix32 buckets of the lowered string `s`:
     * `[md5(tokᵢ) % m …, md5(tokᵢ + ' ' + tokᵢ₊₁) % m …]`. */
-  def buckets(s: UTF8String, m: Long): Array[Long] = {
+  def buckets(s: UTF8String, m: Long): GenericArrayData = {
     val b = s.getBytes
     // pass 1: token spans (start offsets + lengths), counted exactly
     var nt = 0
@@ -118,6 +109,6 @@ object GramWalk {
       out(nt + i) = prefix32(d.digest()) % m
       i += 1
     }
-    out
+    new GenericArrayData(out)
   }
 }

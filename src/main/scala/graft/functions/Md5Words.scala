@@ -1,10 +1,8 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.util.GenericArrayData
-import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
+import org.apache.spark.sql.types.{ArrayType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Both 60-bit md5 words of a string in ONE digest pass —
@@ -21,23 +19,14 @@ import org.apache.spark.unsafe.types.UTF8String
   * at sf1 this tripled the capped-posting build. This expression runs one
   * thread-local digest and extracts both words with shifts, inside
   * WholeStageCodegen. */
-case class Md5Words(child: Expression) extends UnaryExpression {
+case class Md5Words(child: Expression)
+    extends WalkExpression(StringType, ArrayType(LongType, containsNull = false)) {
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"md5_words requires string, got ${other.simpleString}")
-  }
+  override protected def walk(in: Any): Any =
+    Md5Digest.words(in.asInstanceOf[UTF8String])
 
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-
-  override protected def nullSafeEval(input: Any): Any =
-    new GenericArrayData(Md5Digest.words(input.asInstanceOf[UTF8String]))
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"""${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData(
-         |  graft.functions.Md5Digest.words($c));""".stripMargin)
+  override protected def genWalk(c: String): String =
+    s"graft.functions.Md5Digest.words($c)"
 
   override protected def withNewChildInternal(newChild: Expression): Md5Words =
     copy(child = newChild)
@@ -54,22 +43,14 @@ case class Md5Words(child: Expression) extends UnaryExpression {
   * per-TOKEN hot paths (DSIR postings, winnowing shingles, the hashing
   * trick), where those allocations dominate the honest-sink timing. One
   * thread-local digest, four shifts, zero string churn. */
-case class Md5Prefix32(child: Expression) extends UnaryExpression {
+case class Md5Prefix32(child: Expression)
+    extends WalkExpression(StringType, LongType) {
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"md5_prefix32 requires string, got ${other.simpleString}")
-  }
+  override protected def walk(in: Any): Any =
+    Md5Digest.prefix32(in.asInstanceOf[UTF8String])
 
-  override def dataType: DataType = LongType
-
-  override protected def nullSafeEval(input: Any): Any =
-    Md5Digest.prefix32(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.Md5Digest.prefix32($c);")
+  override protected def genWalk(c: String): String =
+    s"graft.functions.Md5Digest.prefix32($c)"
 
   override protected def withNewChildInternal(newChild: Expression): Md5Prefix32 =
     copy(child = newChild)
@@ -83,7 +64,7 @@ object Md5Digest {
   private val md = ThreadLocal.withInitial[java.security.MessageDigest](
     () => java.security.MessageDigest.getInstance("MD5"))
 
-  def words(s: UTF8String): Array[Long] = {
+  def words(s: UTF8String): GenericArrayData = {
     val d = md.get()
     d.reset()
     val dig = d.digest(s.getBytes)
@@ -93,7 +74,7 @@ object Md5Digest {
       while (i < off + 7) { v = (v << 8) | (dig(i) & 0xffL); i += 1 }
       (v << 4) | ((dig(off + 7) & 0xf0L) >>> 4)
     }
-    Array(word(0), word(8))
+    new GenericArrayData(Array(word(0), word(8)))
   }
 
   /** First 4 digest bytes as an unsigned 32-bit value in a long —

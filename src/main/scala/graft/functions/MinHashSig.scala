@@ -1,17 +1,15 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, XXH64}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.{Expression, XXH64}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
+import org.apache.spark.sql.types.{ArrayType, LongType}
 
 /** MinHash signature over an array of 64-bit shingle hashes: for each of
   * `numHashes` hash functions k, the minimum of `xxhash64(k, h)` over the
   * array — BIT-COMPATIBLE with the declarative
   * `transform(sequence(0, n-1), k -> array_min(transform(hs, h -> xxhash64(k, h))))`
   * (Spark's XxHash64 chains `XXH64.hashInt(k, 42)` then `hashLong(h, ·)`;
-  * the per-function seeds are precomputed here).
+  * the per-function seeds are precomputed in [[MinHashWalk]]).
   *
   * The declarative form allocates n+1 intermediate arrays per row; this is
   * one primitive double loop inside WholeStageCodegen. Empty arrays yield
@@ -19,23 +17,32 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
   * plans — callers filter empty shingle sets first, as dedup_minhash does).
   */
 case class MinHashSig(child: Expression, numHashes: Int)
-  extends UnaryExpression {
+    extends WalkExpression(ArrayType(LongType), ArrayType(LongType, containsNull = false)) {
 
-  require(numHashes > 0 && numHashes <= 256)
+  require(numHashes > 0 && numHashes <= MinHashWalk.MaxHashes)
 
-  @transient private lazy val seeds: Array[Long] =
-    Array.tabulate(numHashes)(k => XXH64.hashInt(k, 42L))
+  override protected def walk(in: Any): Any =
+    MinHashWalk.sig(in.asInstanceOf[ArrayData], numHashes)
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(LongType, _) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"minhash_sig requires array<bigint>, got ${other.simpleString}")
-  }
+  override protected def genWalk(c: String): String =
+    s"graft.functions.MinHashWalk.sig($c, $numHashes)"
 
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
+  override protected def withNewChildInternal(newChild: Expression): MinHashSig =
+    copy(child = newChild)
 
-  override protected def nullSafeEval(input: Any): Any = {
-    val arr = input.asInstanceOf[ArrayData]
+  override def prettyName: String = "minhash_sig"
+}
+
+/** [[MinHashSig]]'s walker, called by eval and generated code. */
+object MinHashWalk {
+  val MaxHashes = 256
+
+  /** Per-function seeds `XXH64.hashInt(k, 42)`, the first link of Spark's
+    * `xxhash64(k, h)` chain, computed once for every k. */
+  private val Seeds: Array[Long] =
+    Array.tabulate(MaxHashes)(k => XXH64.hashInt(k, 42L))
+
+  def sig(arr: ArrayData, numHashes: Int): GenericArrayData = {
     val n = arr.numElements()
     val sig = Array.fill(numHashes)(Long.MaxValue)
     var i = 0
@@ -44,7 +51,7 @@ case class MinHashSig(child: Expression, numHashes: Int)
         val h = arr.getLong(i)
         var k = 0
         while (k < numHashes) {
-          val v = XXH64.hashLong(h, seeds(k))
+          val v = XXH64.hashLong(h, Seeds(k))
           if (v < sig(k)) sig(k) = v
           k += 1
         }
@@ -53,37 +60,4 @@ case class MinHashSig(child: Expression, numHashes: Int)
     }
     new GenericArrayData(sig)
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val seedsRef = ctx.addReferenceObj("seeds", seeds, "long[]")
-    nullSafeCodeGen(ctx, ev, arr => {
-      val i = ctx.freshName("i")
-      val k = ctx.freshName("k")
-      val n = ctx.freshName("n")
-      val h = ctx.freshName("h")
-      val v = ctx.freshName("v")
-      val sig = ctx.freshName("sig")
-      val xxh = classOf[XXH64].getName
-      s"""
-         |final int $n = $arr.numElements();
-         |final long[] $sig = new long[$numHashes];
-         |java.util.Arrays.fill($sig, Long.MAX_VALUE);
-         |for (int $i = 0; $i < $n; $i++) {
-         |  if (!$arr.isNullAt($i)) {
-         |    final long $h = $arr.getLong($i);
-         |    for (int $k = 0; $k < $numHashes; $k++) {
-         |      final long $v = $xxh.hashLong($h, $seedsRef[$k]);
-         |      if ($v < $sig[$k]) $sig[$k] = $v;
-         |    }
-         |  }
-         |}
-         |${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData($sig);
-       """.stripMargin
-    })
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): MinHashSig =
-    copy(child = newChild)
-
-  override def prettyName: String = "minhash_sig"
 }

@@ -1,10 +1,8 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
+import org.apache.spark.sql.types.{ArrayType, LongType}
 
 /** 63-bit SimHash signature from an array of 64-bit token hashes — the
   * fused form of the per-bit majority vote (reference semantics: SURVEY.md
@@ -18,18 +16,24 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
   * O(tokens×63) register arithmetic. Null elements are skipped; a null
   * array yields null.
   */
-case class SimHash64(child: Expression) extends UnaryExpression {
+case class SimHash64(child: Expression)
+    extends WalkExpression(ArrayType(LongType), LongType) {
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(LongType, _) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"simhash64 requires array<bigint>, got ${other.simpleString}")
-  }
+  override protected def walk(in: Any): Any =
+    SimHashWalk.sig(in.asInstanceOf[ArrayData])
 
-  override def dataType: DataType = LongType
+  override protected def genWalk(c: String): String =
+    s"graft.functions.SimHashWalk.sig($c)"
 
-  override protected def nullSafeEval(input: Any): Any = {
-    val arr = input.asInstanceOf[ArrayData]
+  override protected def withNewChildInternal(newChild: Expression): SimHash64 =
+    copy(child = newChild)
+
+  override def prettyName: String = "simhash64"
+}
+
+/** [[SimHash64]]'s walker, called by eval and generated code. */
+object SimHashWalk {
+  def sig(arr: ArrayData): Long = {
     val counts = new Array[Int](63)
     var i = 0
     val n = arr.numElements()
@@ -52,36 +56,4 @@ case class SimHash64(child: Expression) extends UnaryExpression {
     }
     r
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, arr => {
-      val i = ctx.freshName("i")
-      val n = ctx.freshName("n")
-      val b = ctx.freshName("b")
-      val h = ctx.freshName("h")
-      val counts = ctx.freshName("counts")
-      val r = ctx.freshName("r")
-      s"""
-         |final int $n = $arr.numElements();
-         |final int[] $counts = new int[63];
-         |for (int $i = 0; $i < $n; $i++) {
-         |  if (!$arr.isNullAt($i)) {
-         |    final long $h = $arr.getLong($i);
-         |    for (int $b = 0; $b < 63; $b++) {
-         |      $counts[$b] += ((($h >>> $b) & 1L) == 1L) ? 1 : -1;
-         |    }
-         |  }
-         |}
-         |long $r = 0L;
-         |for (int $b = 0; $b < 63; $b++) {
-         |  if ($counts[$b] > 0) $r |= 1L << $b;
-         |}
-         |${ev.value} = $r;
-       """.stripMargin
-    })
-
-  override protected def withNewChildInternal(newChild: Expression): SimHash64 =
-    copy(child = newChild)
-
-  override def prettyName: String = "simhash64"
 }

@@ -1,10 +1,8 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
+import org.apache.spark.sql.types.{ArrayType, LongType, StringType}
 
 /** Total syllable count of a token array under the standard vowel-group
   * heuristic: per word, the number of maximal `[aeiouy]+` runs, min 1;
@@ -20,18 +18,24 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
   * multi-byte character simply breaks a vowel run — exactly what the
   * regex on the decoded string does, since no non-ASCII char is in
   * `[aeiouy]`. Null elements are skipped; a null array yields null. */
-case class SyllableSum(child: Expression) extends UnaryExpression {
+case class SyllableSum(child: Expression)
+    extends WalkExpression(ArrayType(StringType), LongType) {
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"syllable_sum requires array<string>, got ${other.simpleString}")
-  }
+  override protected def walk(in: Any): Any =
+    SyllableWalk.sum(in.asInstanceOf[ArrayData])
 
-  override def dataType: DataType = LongType
+  override protected def genWalk(c: String): String =
+    s"graft.functions.SyllableWalk.sum($c)"
 
-  override protected def nullSafeEval(input: Any): Any = {
-    val arr = input.asInstanceOf[ArrayData]
+  override protected def withNewChildInternal(newChild: Expression): SyllableSum =
+    copy(child = newChild)
+
+  override def prettyName: String = "syllable_sum"
+}
+
+/** [[SyllableSum]]'s walker, called by eval and generated code. */
+object SyllableWalk {
+  def sum(arr: ArrayData): Long = {
     var total = 0L
     var i = 0
     val n = arr.numElements()
@@ -55,47 +59,4 @@ case class SyllableSum(child: Expression) extends UnaryExpression {
     }
     total
   }
-
-  // NOTE: no generated line may START with '|' — the codegen Block
-  // interpolator margin-strips leading pipes, so a continuation line
-  // beginning with '||' silently compiles to invalid Java and the whole
-  // projection falls back to interpreted mode. Break long boolean chains
-  // AFTER the operator.
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, arr => {
-      val i = ctx.freshName("i")
-      val n = ctx.freshName("n")
-      val j = ctx.freshName("j")
-      val b = ctx.freshName("b")
-      val c = ctx.freshName("c")
-      val v = ctx.freshName("v")
-      val runs = ctx.freshName("runs")
-      val inRun = ctx.freshName("inRun")
-      val total = ctx.freshName("total")
-      s"""
-         |final int $n = $arr.numElements();
-         |long $total = 0L;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  if (!$arr.isNullAt($i)) {
-         |    final byte[] $b = $arr.getUTF8String($i).getBytes();
-         |    int $runs = 0;
-         |    boolean $inRun = false;
-         |    for (int $j = 0; $j < $b.length; $j++) {
-         |      final byte $c = $b[$j];
-         |      final boolean $v = $c == 'a' || $c == 'e' || $c == 'i' ||
-         |        $c == 'o' || $c == 'u' || $c == 'y';
-         |      if ($v && !$inRun) $runs++;
-         |      $inRun = $v;
-         |    }
-         |    $total += ($runs > 0) ? $runs : 1;
-         |  }
-         |}
-         |${ev.value} = $total;
-       """.stripMargin
-    })
-
-  override protected def withNewChildInternal(newChild: Expression): SyllableSum =
-    copy(child = newChild)
-
-  override def prettyName: String = "syllable_sum"
 }

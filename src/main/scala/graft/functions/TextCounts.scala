@@ -1,9 +1,7 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types.{DataType, LongType, StringType}
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.types.{LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Fused per-row text counters for the quality/filter features — each is
@@ -202,45 +200,37 @@ object TextByteWalk { // public: generated Java calls the static forwarders
   }
 }
 
-private[functions] abstract class TextCountExpression extends UnaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires string, got ${other.simpleString}")
-  }
-  override def dataType: DataType = LongType
-  /** Static forwarder the generated Java calls. */
-  protected def walker: String
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.TextByteWalk.$walker($c);")
-}
-
 /** `token_count(lowered)` — size of the canonical token split, fused. */
-case class TokenCount(child: Expression) extends TextCountExpression {
-  override protected def nullSafeEval(input: Any): Any =
-    TextByteWalk.tokenRuns(input.asInstanceOf[UTF8String])
-  override protected def walker: String = "tokenRuns"
+case class TokenCount(child: Expression)
+    extends WalkExpression(StringType, LongType) {
+  override protected def walk(in: Any): Any =
+    TextByteWalk.tokenRuns(in.asInstanceOf[UTF8String])
+  override protected def genWalk(c: String): String =
+    s"graft.functions.TextByteWalk.tokenRuns($c)"
   override protected def withNewChildInternal(newChild: Expression): TokenCount =
     copy(child = newChild)
   override def prettyName: String = "token_count"
 }
 
 /** `stop_count(lowered)` — quality-scorer stopword matches, fused. */
-case class StopCount(child: Expression) extends TextCountExpression {
-  override protected def nullSafeEval(input: Any): Any =
-    TextByteWalk.stopRuns(input.asInstanceOf[UTF8String])
-  override protected def walker: String = "stopRuns"
+case class StopCount(child: Expression)
+    extends WalkExpression(StringType, LongType) {
+  override protected def walk(in: Any): Any =
+    TextByteWalk.stopRuns(in.asInstanceOf[UTF8String])
+  override protected def genWalk(c: String): String =
+    s"graft.functions.TextByteWalk.stopRuns($c)"
   override protected def withNewChildInternal(newChild: Expression): StopCount =
     copy(child = newChild)
   override def prettyName: String = "stop_count"
 }
 
 /** `punct_count(raw)` — `[^a-z0-9\s']` code points, fused. */
-case class PunctCount(child: Expression) extends TextCountExpression {
-  override protected def nullSafeEval(input: Any): Any =
-    TextByteWalk.punctChars(input.asInstanceOf[UTF8String])
-  override protected def walker: String = "punctChars"
+case class PunctCount(child: Expression)
+    extends WalkExpression(StringType, LongType) {
+  override protected def walk(in: Any): Any =
+    TextByteWalk.punctChars(in.asInstanceOf[UTF8String])
+  override protected def genWalk(c: String): String =
+    s"graft.functions.TextByteWalk.punctChars($c)"
   override protected def withNewChildInternal(newChild: Expression): PunctCount =
     copy(child = newChild)
   override def prettyName: String = "punct_count"

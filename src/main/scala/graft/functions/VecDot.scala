@@ -1,8 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
 
@@ -23,7 +22,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
   * this expression.
   */
 case class VecDot(left: Expression, right: Expression)
-  extends BinaryExpression {
+  extends BinaryWalkExpression {
 
   private def elemType(e: Expression): Option[DataType] = e.dataType match {
     case ArrayType(FloatType, _)  => Some(FloatType)
@@ -41,63 +40,39 @@ case class VecDot(left: Expression, right: Expression)
 
   override def dataType: DataType = DoubleType
 
-  override def nullable: Boolean = true
+  @transient private lazy val floats = (elemType(left).contains(FloatType),
+    elemType(right).contains(FloatType))
 
-  private def get(arr: ArrayData, i: Int, t: DataType): Double = t match {
-    case FloatType => arr.getFloat(i).toDouble
-    case _         => arr.getDouble(i)
-  }
+  override protected def walk(a: Any, b: Any): AnyRef = VecDotWalk.dot(
+    a.asInstanceOf[ArrayData], floats._1, b.asInstanceOf[ArrayData], floats._2)
 
-  override protected def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
-    val (tx, ty) = (elemType(left).get, elemType(right).get)
-    if (x.numElements() != y.numElements()) null
-    else {
-      var acc = 0.0
-      var i = 0
-      val n = x.numElements()
-      while (i < n) {
-        if (x.isNullAt(i) || y.isNullAt(i)) return null
-        acc += get(x, i, tx) * get(y, i, ty)
-        i += 1
-      }
-      acc
-    }
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (x, y) => {
-      def g(arr: String, i: String, t: DataType): String = t match {
-        case FloatType => s"(double) $arr.getFloat($i)"
-        case _         => s"$arr.getDouble($i)"
-      }
-      val i = ctx.freshName("i")
-      val n = ctx.freshName("n")
-      val acc = ctx.freshName("acc")
-      s"""
-         |final int $n = $x.numElements();
-         |if ($n != $y.numElements()) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  double $acc = 0.0;
-         |  for (int $i = 0; $i < $n; $i++) {
-         |    if ($x.isNullAt($i) || $y.isNullAt($i)) {
-         |      ${ev.isNull} = true;
-         |      break;
-         |    }
-         |    $acc += ${g(x, i, elemType(left).get)} * ${g(y, i, elemType(right).get)};
-         |  }
-         |  if (!${ev.isNull}) {
-         |    ${ev.value} = $acc;
-         |  }
-         |}
-       """.stripMargin
-    })
+  override protected def genWalk(x: String, y: String): String =
+    s"graft.functions.VecDotWalk.dot($x, ${floats._1}, $y, ${floats._2})"
 
   override protected def withNewChildrenInternal(
     newLeft: Expression, newRight: Expression): VecDot =
     copy(left = newLeft, right = newRight)
 
   override def prettyName: String = "vec_dot"
+}
+
+/** [[VecDot]]'s walker, called by eval and generated code. */
+object VecDotWalk {
+  @inline private def get(a: ArrayData, i: Int, isFloat: Boolean): Double =
+    if (isFloat) a.getFloat(i).toDouble else a.getDouble(i)
+
+  /** Σ x(i)·y(i), accumulated in array order; null when the lengths
+    * differ or either side has a null slot. */
+  def dot(x: ArrayData, xFloat: Boolean, y: ArrayData, yFloat: Boolean): java.lang.Double = {
+    val n = x.numElements()
+    if (n != y.numElements()) return null
+    var acc = 0.0
+    var i = 0
+    while (i < n) {
+      if (x.isNullAt(i) || y.isNullAt(i)) return null
+      acc += get(x, i, xFloat) * get(y, i, yFloat)
+      i += 1
+    }
+    acc
+  }
 }

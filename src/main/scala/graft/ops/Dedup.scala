@@ -715,10 +715,12 @@ object Dedup {
     // exchange — and on the small cluster ids it cost more than the gate
     // saved): sym is a checkpointed LogicalRDD, so counting its
     // `queryExecution.toRdd` is ONE narrow job over the already-cached
-    // blocks — no exchange, no AQE compile, no SQL machinery.
+    // blocks — no exchange, no AQE compile, no SQL machinery. The no-op
+    // select builds a fresh Dataset per attempt (see retryInternalOnce);
+    // the optimizer drops it, so the probe stays that one narrow job.
     val aqeGate = 4L * 1000 * 1000
     val symRows = graft.Tables.retryInternalOnce("cc graph size probe")(
-      sym.queryExecution.toRdd.count())
+      sym.select(col("a"), col("b")).queryExecution.toRdd.count())
     s.conf.set("spark.sql.adaptive.enabled", (symRows >= aqeGate).toString)
     var labels = sym.select(col("a").as("id")).distinct()
       .withColumn("lbl", col("id")).transform(lineageCut)

@@ -1,7 +1,7 @@
 package graft.ops
 
 import graft.functions.GraftFunctions
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -32,22 +32,15 @@ import org.apache.spark.sql.functions._
   * recall is ≈ .4 by design: LSH trades the far tail for never scanning n².
   */
 private[graft] object SignLsh {
-  val Dim: Int = graft.functions.BandKeys.Dim
-  val Bands: Int = graft.functions.BandKeys.Bands
-  val BandBits: Int = graft.functions.BandKeys.BandBits
+  val Dim: Int = graft.functions.BandWalk.Dim
+  val Bands: Int = graft.functions.BandWalk.Bands
+  val BandBits: Int = graft.functions.BandWalk.BandBits
   val BucketCap = 64
 
   /** ±1 weight of hyperplane j at dimension d (see
-    * [[graft.functions.BandKeys.weight]] — single source of truth shared
+    * [[graft.functions.BandWalk.weight]] — single source of truth shared
     * with the fused expression and inlined by the SQL twin below). */
-  def weight(j: Int, d: Int): Int = graft.functions.BandKeys.weight(j, d)
-
-  /** `array<int>` of [[Bands]] packed sign keys for an embedding column —
-    * the fused codegen'd [[graft.functions.BandKeys]] expression: all 128
-    * projections in one primitive loop per row (measured ~120x the
-    * 128-separate-vec_dot formulation it replaces). */
-  def bandKeys(spark: SparkSession, emb: Column): Column =
-    GraftFunctions.bandKeys(spark, emb)
+  def weight(j: Int, d: Int): Int = graft.functions.BandWalk.weight(j, d)
 
   /** embeddings table + norm + band-key array (callers cache: it feeds the
     * banding pass and both sides of the verify join). */
@@ -55,7 +48,7 @@ private[graft] object SignLsh {
     graft.Tables.load(spark, dir, "embeddings")
       .withColumn("nrm",
         sqrt(GraftFunctions.vecDot(spark, col("embedding"), col("embedding"))))
-      .withColumn("bk", bandKeys(spark, col("embedding")))
+      .withColumn("bk", GraftFunctions.bandKeys(spark, col("embedding")))
 
   /** Cap-and-refine survivors: (vec_id, band, rkey). Exposed for the spec
     * asserting no surviving bucket exceeds `cap`. Shuffles only

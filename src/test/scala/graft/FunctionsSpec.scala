@@ -329,15 +329,156 @@ class FunctionsSpec extends SparkTestBase {
       conv(substring(md5(x), 1, 8), 16, 10).cast("long") % m)
   }
 
+  test("pq_assign ≡ max_by(cid, struct(-d2, -cid)) over the zip_with fold " +
+    "on hostile input, codegen and interpreted") {
+    import org.apache.spark.sql.types._
+    val nan = Double.NaN
+    val inf = Double.PositiveInfinity
+    // (sub, books, the cid Spark's declarative form picks)
+    val cases = Seq[(Seq[Any], Seq[Any], Any)](
+      (Seq(1.0, 2.0), Seq(Row(5L, Seq(1.0, 2.0)), Row(3L, Seq(0.0, 0.0)),
+        Row(7L, Seq(1.0, 2.0))), 5L), // d² tie → lowest cid
+      (Seq(nan, 1.0), Seq(Row(4L, Seq(0.0, 0.0)), Row(2L, Seq(9.0, 9.0))), 2L),
+      (Seq(0.0, 0.0), Seq(Row(1L, Seq(0.0, 0.0)), Row(2L, Seq(nan, 0.0))), 2L),
+      (Seq(inf, 0.0), Seq(Row(1L, Seq(0.0, 0.0)), Row(2L, Seq(inf, 0.0))), 2L),
+      (Seq(-inf, 1.0), Seq(Row(2L, Seq(1.0, 1.0)), Row(1L, Seq(2.0, 2.0))), 1L),
+      (Seq(null, 1.0), Seq(Row(3L, Seq(0.0, 0.0)), Row(1L, Seq(5.0, 5.0))), 1L),
+      (Seq(0.0, 0.0), Seq(Row(1L, Seq(null, 0.0)), Row(2L, Seq(5.0, 5.0))), 2L),
+      (Seq(0.0, 0.0), Seq.empty, null),
+      (Seq(0.0, 0.0), Seq(Row(1L, Seq(0.0)), Row(2L, Seq(9.0, 9.0)),
+        Row(3L, Seq(0.0, 0.0, 0.0))), 2L),
+      (Seq(0.0, 0.0), Seq(Row(4L, Seq(0.0)), Row(2L, Seq(0.0, 0.0, 0.0))), 2L),
+      (Seq(1.0, 1.0), Seq(null, Row(3L, null), Row(6L, Seq(1.0, 1.0))), 6L),
+      (Seq(0.0, 0.0), Seq(Row(null, Seq(0.0, 0.0)), Row(1L, Seq(5.0, 5.0))), null),
+      (Seq(0.0, 0.0), Seq(Row(null, Seq(0.0, 0.0)), Row(4L, Seq(0.0, 0.0))), 4L),
+      (Seq.empty, Seq(Row(3L, Seq.empty), Row(1L, Seq(0.0))), 3L))
+    val schema = StructType(Seq(
+      StructField("id", LongType),
+      StructField("sub", ArrayType(DoubleType)),
+      StructField("books", ArrayType(StructType(Seq(
+        StructField("cid", LongType),
+        StructField("cvec", ArrayType(DoubleType))))))))
+    val df = scanned(spark.createDataFrame(spark.sparkContext.parallelize(
+        cases.zipWithIndex.map { case ((s, b, _), i) => Row(i.toLong, s, b) }, 1),
+      schema)).withColumn("fsub", col("sub").cast("array<float>"))
+    def declarative(sub: String) = df
+      .select(col("id"), col(sub).as("sub"), explode_outer(col("books")).as("b"))
+      .withColumn("d2", aggregate(zip_with(col("sub"), col("b.cvec"),
+        (x, y) => (x.cast(DoubleType) - y) * (x.cast(DoubleType) - y)),
+        lit(0.0), (acc, x) => acc + x))
+      .groupBy(col("id"))
+      .agg(max_by(col("b.cid"), struct(-col("d2"), -col("b.cid"))).as("cid"))
+    def byId(d: org.apache.spark.sql.DataFrame) =
+      d.collect().map(r => r.getLong(0) -> r.get(1)).toMap
+    val want = cases.zipWithIndex.map { case ((_, _, c), i) => i.toLong -> c }.toMap
+    def check(): Unit = for (sub <- Seq("sub", "fsub")) {
+      assert(byId(declarative(sub)) == want, s"declarative twin on $sub")
+      assert(byId(df.select(col("id"),
+        GraftFunctions.pqAssign(spark, col(sub), col("books")))) == want,
+        s"pq_assign on $sub")
+    }
+    check()
+    interpreted { check() }
+  }
+
+  /** A sample of fixture rows plus hostile ones, one column per kernel
+    * input type. Hostile: `\x0B`, invalid UTF-8, NaN/±Inf, empty,
+    * null-slotted and length-mismatched arrays, PQ books with null
+    * entries, cids, cvecs and slots. */
+  private lazy val paritySample = {
+    import org.apache.spark.sql.types._
+    val docs = Tables.load(spark, sf, "documents").orderBy("doc_id")
+      .select("text").limit(12).collect().map(_.getString(0))
+    val embs = Tables.load(spark, sf, "embeddings").orderBy("vec_id")
+      .select("embedding").limit(12).collect().map(_.getSeq[Float](0))
+    val books = embs.take(4).toSeq.zipWithIndex
+      .map { case (e, j) => Row(j * 7L, e.map(_.toDouble)) }
+    val fixture = docs.indices.map { i =>
+      val toks = docs(i).toLowerCase.split(" ").toSeq
+      Row(i.toLong, docs(i).getBytes("UTF-8"),
+        toks.map(_.hashCode * 0x9E3779B97F4A7C15L), embs(i),
+        embs((i + 1) % embs.length).map(_.toDouble), toks, books)
+    }
+    val (nan, inf) = (Float.NaN, Float.PositiveInfinity)
+    val hostile = Seq(
+      Row(100L, "\u000B- vt bullet\nthe\u000Band\u000B...".getBytes("UTF-8"),
+        Seq(1L, null, 3L), Seq(1f, null, nan), Seq(inf.toDouble, 0.0, -1.0),
+        Seq("aye", null, ""), Seq(Row(1L, Seq(1.0, null, 2.0)), null,
+          Row(null, Seq(0.0, 0.0, 0.0)), Row(2L, null))),
+      Row(101L, Array[Byte](-1, 97, -61, 32, 116, 104, 101, 32, -30, -128),
+        Seq.empty[Long], Seq.empty[Float], Seq.empty[Double],
+        Seq.empty[String], Seq.empty[Row]),
+      Row(102L, null, null, null, null, null, null),
+      Row(103L, Array.emptyByteArray, Seq(Long.MinValue, Long.MaxValue),
+        Seq.fill(64)(nan), Seq.fill(63)(-inf.toDouble), Seq(null),
+        Seq(Row(5L, Seq.fill(64)(Double.NaN)), Row(3L, Seq.fill(63)(0.0)))),
+      Row(104L, "x\u000By".getBytes("UTF-8"), Seq(7L),
+        Seq.tabulate(64)(i => if (i == 9) null else i.toFloat),
+        Seq.fill(64)(Double.NegativeInfinity), Seq("queueing"), books))
+    val schema = StructType(Seq(
+      StructField("id", LongType), StructField("sb", BinaryType),
+      StructField("hs", ArrayType(LongType)),
+      StructField("fv", ArrayType(FloatType)),
+      StructField("dv", ArrayType(DoubleType)),
+      StructField("toks", ArrayType(StringType)),
+      StructField("books", ArrayType(StructType(Seq(
+        StructField("cid", LongType),
+        StructField("cvec", ArrayType(DoubleType))))))))
+    scanned(spark.createDataFrame(
+        spark.sparkContext.parallelize(fixture ++ hostile, 1), schema)
+      .withColumn("s", col("sb").cast("string")).drop("sb"))
+  }
+
+  test("every registered function gives the same rows under CODEGEN_ONLY " +
+    "and NO_CODEGEN, on fixture and hostile rows") {
+    import org.apache.spark.sql.catalyst.expressions.Alias
+    val df = paritySample
+    // candidate arguments; each function is called with every 1- and
+    // 2-argument combination it accepts, so a new kernel is covered as
+    // soon as it is registered
+    val pool = Seq("s", "lower(s)", "hs", "fv", "dv", "toks", "books", "16")
+    val resolved = df.selectExpr(pool: _*).queryExecution.analyzed
+      .expressions.map { case Alias(c, _) => c; case e => e }
+    val args = pool.zip(resolved)
+    val calls = GraftFunctions.descriptors.flatMap { case (id, _, build) =>
+      val sigs = (args.map(Seq(_)) ++ (for (a <- args; b <- args) yield Seq(a, b)))
+        .filter(sig => scala.util.Try(
+          build(sig.map(_._2)).checkInputDataTypes().isSuccess).getOrElse(false))
+      assert(sigs.nonEmpty,
+        s"${id.funcName}: no sample column fits its input type — add one")
+      sigs.map(sig => s"${id.funcName}(${sig.map(_._1).mkString(", ")})")
+    }
+    def run() = df.selectExpr("id" +: calls: _*).collect().sortBy(_.getLong(0))
+    val codegen = inMode(wholeStage = true, "CODEGEN_ONLY")(run())
+    val interp = interpreted(run())
+    assert(codegen.length == interp.length)
+    for ((c, i) <- codegen.zip(interp); k <- calls.indices)
+      assert(Row(c.get(k + 1)) == Row(i.get(k + 1)),
+        s"${calls(k)} on row ${c.getLong(0)}: codegen ${c.get(k + 1)}, " +
+          s"interpreted ${i.get(k + 1)}")
+  }
+
+  /** Write `df` as parquet and read it back: projections over a scan run
+    * inside whole-stage codegen, where ConvertToLocalRelation would
+    * evaluate them over a literal frame with an interpreted projection. */
+  private def scanned(df: org.apache.spark.sql.DataFrame) = {
+    val dir = java.nio.file.Files.createTempDirectory("graft_fn").resolve("t")
+    df.write.parquet(dir.toString)
+    spark.read.parquet(dir.toString)
+  }
+
   /** Run `f` with BOTH wholeStage codegen off and expression codegen
     * forced to NO_CODEGEN — disabling wholeStage alone leaves expression
     * codegen in FALLBACK mode, so the interpreted nullSafeEval path of
     * custom expressions would never actually execute (round-13 advice). */
-  private def interpreted[A](f: => A): A = {
+  private def interpreted[A](f: => A): A =
+    inMode(wholeStage = false, "NO_CODEGEN")(f)
+
+  private def inMode[A](wholeStage: Boolean, factoryMode: String)(f: => A): A = {
     val prevWs = spark.conf.get("spark.sql.codegen.wholeStage", "true")
     val prevFm = spark.conf.get("spark.sql.codegen.factoryMode", "FALLBACK")
-    spark.conf.set("spark.sql.codegen.wholeStage", "false")
-    spark.conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")
+    spark.conf.set("spark.sql.codegen.wholeStage", wholeStage.toString)
+    spark.conf.set("spark.sql.codegen.factoryMode", factoryMode)
     try f finally {
       spark.conf.set("spark.sql.codegen.wholeStage", prevWs)
       spark.conf.set("spark.sql.codegen.factoryMode", prevFm)

@@ -101,7 +101,7 @@ class PropertySpec extends SparkTestBase {
     rows.toDF("vec_id", "embedding")
       .withColumn("nrm", sqrt(functions.GraftFunctions.vecDot(
         spark, col("embedding"), col("embedding"))))
-      .withColumn("bk", ops.SignLsh.bandKeys(spark, col("embedding")))
+      .withColumn("bk", functions.GraftFunctions.bandKeys(spark, col("embedding")))
   }
 
   test("sign-LSH cap: no surviving bucket exceeds BucketCap even under a " +
