@@ -148,20 +148,14 @@ object Graft {
     merged.result()
   }
 
-  /** Build (or reuse) a configured session. `shufflePartitions` defaults
-    * to the core count — the local-mode analog of sizing partitions to
-    * cluster parallelism (never leave the 200 default on a laptop or a
-    * 32-core driver). */
+  /** Build (or reuse) a configured session ([[Harness.session]]: shuffle
+    * partitions sized to the cores, never the 200 default on a laptop or a
+    * 32-core driver) with the custom functions registered. */
   def session(
-    master: String = s"local[${Runtime.getRuntime.availableProcessors()}]",
+    master: String = s"local[${Harness.cpus}]",
     appName: String = "graft",
-    shufflePartitions: Int = Runtime.getRuntime.availableProcessors()): SparkSession = {
-    val b = SparkSession.builder()
-      .master(master)
-      .appName(appName)
-      .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
-    Tables.sessionConfs.foreach { case (k, v) => b.config(k, v) }
-    val spark = b.getOrCreate()
+    shufflePartitions: Int = Harness.cpus): SparkSession = {
+    val spark = Harness.session(master, shufflePartitions, appName)
     functions.GraftFunctions.register(spark)
     spark
   }

@@ -38,7 +38,7 @@ object Tables {
     "spark.sql.parquet.inferTimestampNTZ.enabled" -> "false",
     "spark.sql.session.timeZone" -> "UTC",
     "spark.sql.adaptive.enabled" -> "true",
-    // managed tables (bucketed-join demo) live outside the repo checkout
+    // managed tables live outside the repo checkout
     "spark.sql.warehouse.dir" ->
       s"${System.getProperty("java.io.tmpdir")}/graft-warehouse")
 
@@ -96,6 +96,9 @@ object Tables {
     // static confs (warehouse dir) can't be set on a live session — they
     // are JVM-wide already; re-apply only the modifiable ones
     sessionConfs.filter { case (k, _) => s.conf.isModifiable(k) }
+      .foreach { case (k, v) => s.conf.set(k, v) }
+    // and the graft confs the caller set at runtime (the scratch root)
+    spark.conf.getAll.filter(_._1.startsWith("spark.graft."))
       .foreach { case (k, v) => s.conf.set(k, v) }
     s.conf.set("spark.sql.shuffle.partitions", shufflePartitions.toString)
     s

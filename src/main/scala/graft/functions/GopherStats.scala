@@ -108,6 +108,9 @@ object GopherWalk { // public: generated Java calls the static forwarders
     *                 skip-all-whitespace-then-test equals the regex (any
     *                 backtrack would place a whitespace byte at the class
     *                 position and fail). '•' is U+2022 = E2 80 A2.
+    *                 DuckDB's RE2 `\s` excludes \x0B, so on a line
+    *                 opening with a vertical tab this walker (Java
+    *                 semantics) and the DuckDB oracle diverge.
     *   - n_ell_line: lines with `endsWith("...")`.
     *   - n_hash:     '#' occurrences (the length-minus-replace idiom; '#'
     *                 is ASCII so char count = byte count).

@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.OpCaches.scratch
 import graft.Tables._
 import graft.influxql.{AdminCatalog, MeasurementCatalog}
 import graft.store.MeasurementStore
@@ -150,7 +151,7 @@ object Admin {
     * distinct day across the store — pure directory metadata, the same
     * bounded listing the day-pruned reads use. */
   private def showShards(spark: SparkSession, dir: String): DataFrame = {
-    val root = java.nio.file.Files.createTempDirectory("show_shards").toString
+    val root = scratch(spark, "show_shards")
     val store = new MeasurementStore(spark, root)
     val points = load(spark, dir, "events")
       .select(col("event_type"), col("user_id"), col("ts").as("time"),
@@ -163,7 +164,7 @@ object Admin {
 
   /** SHOW SHARD GROUPS: the group-level view of the same day listing. */
   private def showShardGroups(spark: SparkSession, dir: String): DataFrame = {
-    val root = java.nio.file.Files.createTempDirectory("shard_groups").toString
+    val root = scratch(spark, "shard_groups")
     val store = new MeasurementStore(spark, root)
     store.append("RawData", load(spark, dir, "events")
       .select(col("event_type"), col("ts").as("time"), col("value")))
@@ -176,7 +177,7 @@ object Admin {
     * positional ids renumber, which the oracle reproduces by excluding
     * the second day. */
   private def dropShard(spark: SparkSession, dir: String): DataFrame = {
-    val root = java.nio.file.Files.createTempDirectory("drop_shard").toString
+    val root = scratch(spark, "drop_shard")
     val store = new MeasurementStore(spark, root)
     val points = load(spark, dir, "events")
       .select(col("event_type"), col("user_id"), col("ts").as("time"),
@@ -261,12 +262,13 @@ object Admin {
          |       WHERE event_type = 'click')))
          |${orderAll("module", "\"database\"", "measurement", "points",
            "series")}""".stripMargin,
+    // the mains' session (Harness.session) runs one shuffle partition per core
     "influxql_show_diagnostics" ->
       s"""SELECT * FROM (VALUES
          |  ('build', 'engine', 'graft'),
          |  ('build', 'spark_version', '4.1.2'),
          |  ('config', 'session_timezone', 'UTC'),
-         |  ('config', 'shuffle_partitions', '32'),
+         |  ('config', 'shuffle_partitions', '${graft.Harness.cpus}'),
          |  ('config', 'adaptive_execution', 'true')
          |) AS t(module, name, value)
          |${orderAll("module", "name", "value")}""".stripMargin,

@@ -374,21 +374,13 @@ object Dedup {
   private[ops] val IncrMod = 5L
   private[ops] val IncrRem = 0L
 
-  /** dir → (table name, warehouse location) of built band indexes; the
-    * index is a write-once storage decision keyed by the source dir
-    * (the Vectors.ensureIvfIndex discipline). */
-  private val bandIndexTables =
-    scala.collection.mutable.Map.empty[String, (String, java.io.File)]
   /** Builds actually performed — the reuse spec's observable. */
   private[graft] var bandIndexBuildCount = 0
-  private lazy val bandIndexHook: Unit = {
-    sys.addShutdownHook { releaseBandIndexes() }; ()
-  }
 
   /** Build (once per source dir) the PERSISTED corpus band index: one row
     * per (corpus exact-dup GROUP, band) carrying the raw signature
     * 4-tuple, an internal 64-bit bucket handle `bkey`, and the group's
-    * members + verification set, written as a managed table
+    * members + verification set, written as a table
     * BUCKETED AND SORTED on bkey — the write-once storage decision that
     * turns every later ingest probe into a ONE-SIDED shuffle: the index
     * side scans pre-placed, pre-sorted buckets with NO Exchange (the
@@ -403,51 +395,35 @@ object Dedup {
     * collision can only ADD a candidate pair, and exact-Jaccard
     * verification discards it, so op outputs stay hash-choice-free and
     * fully oracled. */
-  private[ops] def ensureBandIndex(spark: SparkSession, dir: String): String =
-    synchronized {
-      bandIndexHook
-      bandIndexTables.get(dir) match {
-        case Some((tbl, _)) if spark.catalog.tableExists(tbl) => tbl
-        case _ =>
-          val tbl = "graft_mh_idx_" + Integer.toHexString(dir.hashCode)
-          // managed-table hygiene: a previous session's table dir would
-          // collide with a fresh in-memory catalog (the Joins idiom)
-          spark.sql(s"DROP TABLE IF EXISTS $tbl")
-          val loc = new java.io.File(new java.net.URI(
-            spark.conf.get("spark.sql.warehouse.dir")).getPath, tbl)
-          rmTree(loc)
-          // cache: the grouping (two wide shuffles) feeds both the sig
-          // join and the members/hs join below — uncached, Catalyst
-          // re-derives it per reference
-          val groups = graft.OpCaches.cached(
-            groupsOf(cappedPosting(spark, dir)
-              .filter(col("doc_id") % IncrMod =!= IncrRem)))
-          minhashBands(minhashSig(spark, dir)
-              .join(groups.select(col("rep_id").as("doc_id")), "doc_id"))
-            .withColumnRenamed("doc_id", "rep_id")
-            .join(groups.select(col("rep_id"), col("members"), col("hs")),
-              "rep_id")
-            .withColumn("bkey", xxhash64(col("band"), col("k1"), col("k2"),
-              col("k3"), col("k4")))
-            .write.mode("overwrite")
-            .bucketBy(8, "bkey").sortBy("bkey")
-            .saveAsTable(tbl)
-          bandIndexBuildCount += 1
-          bandIndexTables(dir) = (tbl, loc)
-          tbl
-      }
+  private[ops] def ensureBandIndex(spark: SparkSession, dir: String): String = {
+    val tbl = "graft_mh_idx_" + Integer.toHexString(dir.hashCode)
+    graft.OpCaches.once(spark, dir + "#band", "band_index") { out =>
+      // a table of that name from an earlier build points at a released dir
+      spark.sql(s"DROP TABLE IF EXISTS $tbl")
+      // cache: the grouping (two wide shuffles) feeds both the sig
+      // join and the members/hs join below — uncached, Catalyst
+      // re-derives it per reference
+      val groups = graft.OpCaches.cached(
+        groupsOf(cappedPosting(spark, dir)
+          .filter(col("doc_id") % IncrMod =!= IncrRem)))
+      minhashBands(minhashSig(spark, dir)
+          .join(groups.select(col("rep_id").as("doc_id")), "doc_id"))
+        .withColumnRenamed("doc_id", "rep_id")
+        .join(groups.select(col("rep_id"), col("members"), col("hs")),
+          "rep_id")
+        .withColumn("bkey", xxhash64(col("band"), col("k1"), col("k2"),
+          col("k3"), col("k4")))
+        .write.mode("overwrite").option("path", out)
+        .bucketBy(8, "bkey").sortBy("bkey")
+        .saveAsTable(tbl)
+      bandIndexBuildCount += 1
     }
-
-  private def rmTree(f: java.io.File): Unit = {
-    if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rmTree))
-    f.delete(); ()
+    tbl
   }
 
-  /** Delete every persisted band index and empty the registry. */
-  def releaseBandIndexes(): Unit = synchronized {
-    bandIndexTables.values.foreach { case (_, loc) => rmTree(loc) }
-    bandIndexTables.clear()
-  }
+  /** Delete every persisted band index: the session release
+    * ([[graft.OpCaches.releaseSession]]). */
+  def releaseBandIndexes(): Unit = graft.OpCaches.releaseSession()
 
   /** dedup_index_build: build the persisted corpus band index and report
     * it AS READ FROM DISK — (n_docs, n_reps, n_band_rows, n_buckets), the

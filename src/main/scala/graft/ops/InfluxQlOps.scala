@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.OpCaches.scratch
 import graft.Tables._
 import graft.influxql.InfluxQL
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -443,7 +444,7 @@ object InfluxQlOps {
     * the survivors. (Checkpointed resume of a registered CQ is spec-gated
     * in IngestStoreStreamSpec.) */
   private def showContinuousQueries(spark: SparkSession, dir: String): DataFrame = {
-    val root = java.nio.file.Files.createTempDirectory("cq_registry").toString
+    val root = scratch(spark, "cq_registry")
     val reg = new graft.streaming.CqRegistry(spark, root)
     reg.statement("CREATE CONTINUOUS QUERY cq_hourly ON ciwsdb BEGIN " +
       "SELECT mean(value) AS mv INTO hourly_means FROM events " +
@@ -464,7 +465,7 @@ object InfluxQlOps {
     * is then read back. Gate-checks the whole write path, not just the
     * SELECT translation. */
   private def influxqlInto(spark: SparkSession, dir: String): DataFrame = {
-    val root = java.nio.file.Files.createTempDirectory("influxql_into").toString
+    val root = scratch(spark, "influxql_into")
     val store = new graft.store.MeasurementStore(spark, root)
     store.append("flow", load(spark, dir, "events")
       .select(col("event_type"), col("ts").as("time"), col("value")))
@@ -482,7 +483,7 @@ object InfluxQlOps {
     * fan-out targets are read BACK from disk for the oracle, so the check
     * covers the write fan-out, not just the union SELECT. */
   private def influxqlIntoBackref(spark: SparkSession, dir: String): DataFrame = {
-    val root = java.nio.file.Files.createTempDirectory("influxql_backref").toString
+    val root = scratch(spark, "influxql_backref")
     val store = new graft.store.MeasurementStore(spark, root)
     val ev = load(spark, dir, "events")
     for (et <- Seq("click", "view"))

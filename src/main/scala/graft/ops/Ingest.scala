@@ -1,8 +1,9 @@
 package graft.ops
 
+import graft.OpCaches.scratch
 import graft.Tables._
 import graft.ingest.CsvIngest
-import java.nio.file.{Files, Path}
+import java.nio.file.{Files, Path, Paths}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -51,7 +52,7 @@ object Ingest {
   /** scan_csv_pulses: write one residential-format file per user, ingest
     * through [[CsvIngest.readPulseCsv]], return the tagged points. */
   def scanCsvPulses(spark: SparkSession, dir: String): DataFrame = {
-    val tmp = Files.createTempDirectory("pulses")
+    val tmp = Paths.get(scratch(spark, "pulses"))
     writePulseFiles(spark, dir, tmp)
     totalOrder(CsvIngest.readPulseCsv(spark, tmp.toString)
       .select(col("measurement"), col("siteID"), col("dataloggerID"),
@@ -79,7 +80,7 @@ object Ingest {
         date_format(col("ts"), "yyyy-MM-dd HH:mm:ss").as("t"),
         round(col("value"), 2).as("v"))
       .collect().sortBy(r => (r.getLong(0), r.getString(1), r.getDouble(2)))
-    val tmp = Files.createTempDirectory("campus")
+    val tmp = Paths.get(scratch(spark, "campus"))
     def lines7(rs: Seq[Row]) = rs.map { r =>
       val v = r.getDouble(2)
       s"${r.getString(1)},$v,${v + 1.0},${v + 2.0},${v + 3.0},${v + 4.0},${v + 5.0}"
@@ -167,8 +168,8 @@ object Ingest {
         date_format(col("ts"), "yyyy-MM-dd HH:mm:ss").as("t"),
         floor(col("value")).cast("long").as("p"))
       .collect()
-    val source = Files.createTempDirectory("archive_src")
-    val target = Files.createTempDirectory("archive_tgt")
+    val source = Paths.get(scratch(spark, "archive_src"))
+    val target = Paths.get(scratch(spark, "archive_tgt"))
     rows.groupBy(_.getLong(0)).foreach { case (u, rs) =>
       val body = rs.sortBy(r => (r.getString(1), r.getLong(2)))
         .map(r => s"${r.getString(1)},${r.getLong(2)}").mkString("\n")
@@ -232,7 +233,7 @@ object Ingest {
     * back flat; the malformed line rides the is_bad quarantine channel
     * (spec-gated), mirroring the CSV dead-letter convention. */
   def lineprotoIngest(spark: SparkSession, dir: String): DataFrame = {
-    val tmp = Files.createTempDirectory("lineproto")
+    val tmp = Paths.get(scratch(spark, "lineproto"))
     writeLineProtoFile(spark, dir, tmp)
     val lines = spark.read.text(tmp.toString).withColumnRenamed("value", "line")
     val parsed = graft.ingest.LineProtocol.tagCols(
@@ -243,36 +244,12 @@ object Ingest {
         col("f_bool")))
   }
 
-  /** Scratch root for landed corpora. On a real cluster set
-    * `spark.graft.scratch` to a SHARED filesystem path (HDFS/S3) —
-    * executors write the landing shards and read them back, so a
-    * driver-local temp dir would lose every shard written by a remote
-    * executor. Unset (local[n]) it falls back to the JVM temp dir, where
-    * local threads see one filesystem. */
-  private def scratchRoot(spark: SparkSession): String =
-    spark.conf.getOption("spark.graft.scratch")
-      .getOrElse(System.getProperty("java.io.tmpdir"))
-
-  /** Landed-corpus paths registered for JVM-exit cleanup (one hook,
-    * registered on first landing). */
-  private val landedPaths =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-  private lazy val cleanupHook: Unit =
-    Runtime.getRuntime.addShutdownHook(new Thread(() =>
-      landedPaths.forEach { p =>
-        def rm(f: java.io.File): Unit = {
-          Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-        }
-        rm(new java.io.File(p))
-      }))
-
   /** One landing per (session, fixture dir) — the nDocsMemo discipline:
     * scan_jsonl_corpus and sink_jsonl_quarantine are two views of the
     * SAME landed corpus, so re-landing per call (the round-10 shape) was
-    * both wasted write volume and a temp-dir leak. The landing path is
-    * deterministic in the fixture dir, `overwrite` keeps a re-land (e.g.
-    * from a cloned session) idempotent, and every path is registered for
-    * exit cleanup. */
+    * both wasted write volume and a temp-dir leak. The landing is built
+    * [[graft.OpCaches.once]] (deleted at session release), and the parse
+    * is memoized per (session, landing). */
   private val jsonlMemo = new java.util.concurrent.ConcurrentHashMap[
     (SparkSession, String), DataFrame]()
 
@@ -280,14 +257,25 @@ object Ingest {
     * corrupt lines, and parse it back schema-first — shared by the scan op
     * and its quarantine twin so both sides of the fork carry fixture-
     * reconstruction oracles. The landing write is DISTRIBUTED (`to_json`
-    * per row, `write.text` — never a driver collect) into [[scratchRoot]]
-    * (a shared FS on a cluster), because a 100 TB
+    * per row, `write.text` — never a driver collect) under the scratch
+    * root (a shared FS on a cluster), because a 100 TB
     * corpus lands the same way. The corrupt lines are truncated JSON (the
     * classic mid-write crash artifact), one per doc_id % 97 — derived from
     * the fixtures, so the quarantine content itself is oracle-checkable. */
   private def jsonlParsed(spark: SparkSession, dir: String): DataFrame = {
+    val landed = graft.OpCaches.once(spark, dir + "#jsonl", "graft-jsonl")(
+      landJsonl(spark, dir, _))
     if (jsonlMemo.size > 64) jsonlMemo.clear()
-    val df = jsonlMemo.computeIfAbsent((spark, dir), _ => landJsonl(spark, dir))
+    val df = jsonlMemo.computeIfAbsent((spark, landed), _ =>
+      // schema-FIRST read (never inferred — inference is a second full
+      // pass and silently widens types under dirty data) in PERMISSIVE
+      // mode: a malformed line lands whole in the corrupt-record column
+      // instead of killing the job (the loader.py:52-66 quarantine posture)
+      spark.read.schema("doc_id BIGINT, text STRING, lang STRING, " +
+          "source STRING, n_chars BIGINT, _bad STRING")
+        .option("mode", "PERMISSIVE")
+        .option("columnNameOfCorruptRecord", "_bad")
+        .json(landed))
     // the memoized plan outlives the per-query OpCaches.releaseAll(); the
     // quarantine view selects ONLY the corrupt-record column, which Spark
     // permits solely on a cached parse — so re-register whenever released
@@ -296,44 +284,22 @@ object Ingest {
     else df
   }
 
-  private def landJsonl(spark: SparkSession, dir: String): DataFrame = {
-      // path is unique PER JVM (pid) — the memo that amortizes the landing
-      // is JVM-scoped anyway, and a cross-JVM-shared deterministic path
-      // would let one process's overwrite/cleanup race another's live
-      // scan; the md5 component keys the fixture dir collision-free
-      val tmp = s"${scratchRoot(spark)}/graft-jsonl-" +
-        s"${ProcessHandle.current().pid()}-" +
-        java.security.MessageDigest.getInstance("MD5")
-          .digest(dir.getBytes("UTF-8"))
-          .take(8).map("%02x".format(_)).mkString
-      cleanupHook
-      landedPaths.add(tmp)
-      val docs = load(spark, dir, "documents")
-      val good = docs.select(to_json(struct(col("doc_id"), col("text"),
-        col("lang"), col("source"), col("n_chars"))).as("value"))
-      val bad = docs.filter(col("doc_id") % 97 === 0)
-        .select(concat(lit("{\"doc_id\": "), col("doc_id"),
-          lit(", \"text\": \"trunc")).as("value"))
-      // mixed-schema artifact (round-10 verdict item 8): a producer that
-      // writes ids as JSON strings — VALID JSON, wrong type. The
-      // schema-first read must quarantine it (doc_id BIGINT refuses a
-      // string token), not coerce or null it; one per doc_id % 131 == 5,
-      // disjoint from the truncation family
-      val mixed = docs.filter(col("doc_id") % 131 === 5)
-        .select(concat(lit("{\"doc_id\": \""), col("doc_id"),
-          lit("\", \"text\": \"mixed schema\", \"n_chars\": 1}")).as("value"))
-      good.unionAll(bad).unionAll(mixed).write.mode("overwrite").text(tmp)
-      // schema-FIRST read (never inferred — inference is a second full pass
-      // and silently widens types under dirty data) in PERMISSIVE mode: a
-      // malformed line lands whole in the corrupt-record column instead of
-      // killing the job (the loader.py:52-66 quarantine posture)
-      val schema = "doc_id BIGINT, text STRING, lang STRING, source STRING, " +
-        "n_chars BIGINT, _bad STRING"
-      spark.read.schema(schema)
-        .option("mode", "PERMISSIVE")
-        .option("columnNameOfCorruptRecord", "_bad")
-        .json(tmp)
-        .transform(graft.OpCaches.cached)
+  private def landJsonl(spark: SparkSession, dir: String, out: String): Unit = {
+    val docs = load(spark, dir, "documents")
+    val good = docs.select(to_json(struct(col("doc_id"), col("text"),
+      col("lang"), col("source"), col("n_chars"))).as("value"))
+    val bad = docs.filter(col("doc_id") % 97 === 0)
+      .select(concat(lit("{\"doc_id\": "), col("doc_id"),
+        lit(", \"text\": \"trunc")).as("value"))
+    // mixed-schema artifact (round-10 verdict item 8): a producer that
+    // writes ids as JSON strings — VALID JSON, wrong type. The
+    // schema-first read must quarantine it (doc_id BIGINT refuses a
+    // string token), not coerce or null it; one per doc_id % 131 == 5,
+    // disjoint from the truncation family
+    val mixed = docs.filter(col("doc_id") % 131 === 5)
+      .select(concat(lit("{\"doc_id\": \""), col("doc_id"),
+        lit("\", \"text\": \"mixed schema\", \"n_chars\": 1}")).as("value"))
+    good.unionAll(bad).unionAll(mixed).write.mode("overwrite").text(out)
   }
 
   /** scan_jsonl_corpus: the JSONL document source — the interchange format

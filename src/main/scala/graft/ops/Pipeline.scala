@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.OpCaches.scratch
 import graft.Tables._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -300,7 +301,7 @@ object Pipeline {
     * checksum lets a downstream loader detect a short or corrupt shard
     * without re-scanning the corpus. */
   def pipelineShardManifest(spark: SparkSession, dir: String): DataFrame = {
-    val out = java.nio.file.Files.createTempDirectory("graft_shards").toString
+    val out = scratch(spark, "graft_shards")
     pipelinePackSequences(spark, dir)
       .write.mode("overwrite").partitionBy("shard").parquet(out)
     val back = spark.read.parquet(out)

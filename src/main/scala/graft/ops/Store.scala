@@ -1,8 +1,8 @@
 package graft.ops
 
+import graft.OpCaches.scratch
 import graft.Tables._
 import graft.store.MeasurementStore
-import java.nio.file.Files
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -21,7 +21,7 @@ object Store {
     * of one day (last-write-wins on (tags, time)), then read back the
     * per-day aggregate. Only the revised day's partition is rewritten. */
   def storeRoundtrip(spark: SparkSession, dir: String): DataFrame = {
-    val root = Files.createTempDirectory("measurements").toString
+    val root = scratch(spark, "measurements")
     val store = new MeasurementStore(spark, root)
     val points = load(spark, dir, "events")
       .select(col("event_type"), col("user_id"), col("ts").as("time"),
@@ -46,7 +46,7 @@ object Store {
     * sizes (`maxRecordsPerFile` = the 2000-point batch_size analog), then
     * read back per measurement/day. */
   def sinkInfluxWrite(spark: SparkSession, dir: String): DataFrame = {
-    val root = Files.createTempDirectory("sink_influx").toString
+    val root = scratch(spark, "sink_influx")
     val store = new MeasurementStore(spark, root)
     val points = load(spark, dir, "events")
       .select(col("event_type"), col("user_id"), col("ts").as("time"),
@@ -76,7 +76,7 @@ object Store {
     * rewritten through the crash-safe swap — then read back per-day
     * aggregates; the oracle reconstructs the survivors from the fixture. */
   def storeDeleteRoundtrip(spark: SparkSession, dir: String): DataFrame = {
-    val root = Files.createTempDirectory("store_delete").toString
+    val root = scratch(spark, "store_delete")
     val store = new MeasurementStore(spark, root)
     val points = load(spark, dir, "events")
       .select(col("event_type"), col("user_id"), col("ts").as("time"),
@@ -97,7 +97,7 @@ object Store {
     * (every point of that series across all time, only containing days
     * rewritten), read back per-day aggregates of the survivors. */
   def storeDropSeries(spark: SparkSession, dir: String): DataFrame = {
-    val root = Files.createTempDirectory("store_drop_series").toString
+    val root = scratch(spark, "store_drop_series")
     val store = new MeasurementStore(spark, root)
     val points = load(spark, dir, "events")
       .select(col("event_type"), col("user_id"), col("ts").as("time"),
@@ -120,7 +120,7 @@ object Store {
     * day still holds other series, so all are rewritten to survivors in
     * one job), read back per-day aggregates. */
   def storeDeleteSeriesWindow(spark: SparkSession, dir: String): DataFrame = {
-    val root = Files.createTempDirectory("store_delete_sw").toString
+    val root = scratch(spark, "store_delete_sw")
     val store = new MeasurementStore(spark, root)
     val points = load(spark, dir, "events")
       .select(col("event_type"), col("user_id"), col("ts").as("time"),
@@ -143,7 +143,7 @@ object Store {
     * the rewrite is content-exact while the file counts prove it actually
     * compacted. */
   def storeCompact(spark: SparkSession, dir: String): DataFrame = {
-    val root = Files.createTempDirectory("store_compact").toString
+    val root = scratch(spark, "store_compact")
     val store = new MeasurementStore(spark, root)
     val ev = load(spark, dir, "events")
     def sel(df: DataFrame): DataFrame =
@@ -169,7 +169,7 @@ object Store {
     * immutability of published files, and the merge rewrite are all under
     * the differential gate at once. */
   def storeTimeTravel(spark: SparkSession, dir: String): DataFrame = {
-    val root = Files.createTempDirectory("store_tt").toString
+    val root = scratch(spark, "store_tt")
     val vs = new graft.store.VersionedStore(spark, root)
     val points = load(spark, dir, "events")
       .select(col("event_type"), col("user_id"), col("ts").as("time"),
@@ -210,7 +210,7 @@ object Store {
     * rides along as a constant column: exactly three commits, never two
     * (lost update) or four (double-publish). */
   def storeConcurrentWriters(spark: SparkSession, dir: String): DataFrame = {
-    val root = Files.createTempDirectory("store_occ").toString
+    val root = scratch(spark, "store_occ")
     val vs = new graft.store.VersionedStore(spark, root)
     val points = load(spark, dir, "events")
       .select(col("event_type"), col("user_id"), col("ts").as("time"),
@@ -259,7 +259,7 @@ object Store {
     * footer read per file (bounded by the compaction policy), and day
     * pruning still applies — evolution never forces a rewrite of history. */
   def storeSchemaMerge(spark: SparkSession, dir: String): DataFrame = {
-    val root = Files.createTempDirectory("store_evolve").toString
+    val root = scratch(spark, "store_evolve")
     val store = new MeasurementStore(spark, root)
     val points = load(spark, dir, "events")
       .select(col("event_type"), col("user_id"), col("ts").as("time"),

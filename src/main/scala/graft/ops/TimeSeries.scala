@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.OpCaches.scratch
 import graft.Tables._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -180,7 +181,7 @@ object TimeSeries {
         lit("stale_datalogger").as("alert_type"),
         concat(lit("{\"text\": \"" + msg), col("user_id"), lit("\"}"))
           .as("payload"))
-    val out = java.nio.file.Files.createTempDirectory("alerts").toString
+    val out = scratch(spark, "alerts")
     alerts.write.mode("overwrite").parquet(out)
     totalOrder(spark.read.parquet(out))
   }

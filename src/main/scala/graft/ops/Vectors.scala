@@ -503,47 +503,31 @@ object Vectors {
     lists.write.mode("overwrite").partitionBy("cid").parquet(s"$out/lists")
   }
 
-  /** Session-scoped persisted-index registry, making build-once/query-many
-    * actually ONCE per session (round-9 verdict: each of the two index ops
-    * trained and wrote its own copy per invocation and never deleted it —
-    * repeated bench/verify runs leaked parquet under /tmp, and the
-    * query-many op's measured time was dominated by the build it claims to
-    * amortize). Same discipline as [[Joins.ensureBucketedTables]]: the
-    * index is a write-once storage decision keyed by the source dir;
-    * [[releaseIndexes]] deletes every registered copy (Verify/Bench call it
-    * at session end; a JVM shutdown hook backstops abnormal exits). */
-  private val ivfIndexDirs = scala.collection.mutable.Map.empty[String, String]
-  /** Builds actually performed — the reuse spec's observable. */
-  private[graft] var ivfBuildCount = 0
-  private lazy val ivfShutdownHook: Unit =
-    sys.addShutdownHook { releaseIndexes() }
-
+  /** Build-once/query-many, actually ONCE per session (round-9 verdict:
+    * each of the two index ops trained and wrote its own copy per
+    * invocation and never deleted it — repeated bench/verify runs leaked
+    * parquet under /tmp, and the query-many op's measured time was
+    * dominated by the build it claims to amortize). The index is a
+    * write-once storage decision keyed by the source dir, owned by
+    * [[graft.OpCaches.once]], deleted at session release. */
   private[graft] def ensureIvfIndex(spark: SparkSession, dir: String,
-      base: => DataFrame): String = synchronized {
-    ivfShutdownHook
-    ivfIndexDirs.getOrElseUpdate(dir, {
-      val out = java.nio.file.Files.createTempDirectory("ivf_index").toString
+      base: => DataFrame): String =
+    graft.OpCaches.once(spark, dir + "#ivf", "ivf_index") { out =>
       ivfIndexWrite(spark, base, out)
       ivfBuildCount += 1
-      out
-    })
-  }
-
-  /** Registry lookup for specs: the session dir registered under `key`,
-    * if any (None proves a branch REGISTERED nothing). */
-  private[graft] def indexDirFor(key: String): Option[String] =
-    synchronized { ivfIndexDirs.get(key) }
-
-  /** Delete every persisted index and empty the registry (blocking file
-    * deletes — the disk is really back before the caller proceeds). */
-  def releaseIndexes(): Unit = synchronized {
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rm))
-      f.delete(); ()
     }
-    ivfIndexDirs.values.foreach(d => rm(new java.io.File(d)))
-    ivfIndexDirs.clear()
-  }
+
+  /** Builds actually performed — the reuse spec's observable. */
+  private[graft] var ivfBuildCount = 0
+
+  /** The index dir built under `key`, if any (None proves a branch
+    * REGISTERED nothing). */
+  private[graft] def indexDirFor(key: String): Option[String] =
+    graft.OpCaches.onceDir(key)
+
+  /** Delete every persisted index: the session release
+    * ([[graft.OpCaches.releaseSession]]). */
+  def releaseIndexes(): Unit = graft.OpCaches.releaseSession()
 
   /** Index build + audit read-back: train, persist via [[ivfIndexWrite]],
     * then report each cell AS READ FROM DISK — (cid, n_vecs, cnrm). The
@@ -657,26 +641,11 @@ object Vectors {
     * corpus, not the full one). */
   private[graft] def ensureUpsertIndex(spark: SparkSession, dir: String,
       base: => DataFrame): String =
-    ensureIndexDir(dir + "#upsert", "ivf_upsert") { out =>
+    graft.OpCaches.once(spark, dir + "#upsert", "ivf_upsert") { out =>
       val b = base
       upsertIndexBuild(spark, b, out)
       upsertIndexAppend(spark, b, out)
     }
-
-  /** Generic build-once registry entry: run `init` into a fresh temp dir
-    * the FIRST time `key` is seen this session, reuse (and eventually
-    * [[releaseIndexes]]) it afterwards — the [[ensureIvfIndex]] discipline
-    * factored out so the streaming upsert twin keys its own index without
-    * duplicating the registry plumbing. */
-  private[graft] def ensureIndexDir(key: String, prefix: String)(
-      init: String => Unit): String = synchronized {
-    ivfShutdownHook
-    ivfIndexDirs.getOrElseUpdate(key, {
-      val out = java.nio.file.Files.createTempDirectory(prefix).toString
-      init(out)
-      out
-    })
-  }
 
   /** The post-upsert per-cell generation-split audit read-back shared by
     * the batch op and its streaming twin: each cell AS READ FROM DISK,
@@ -743,7 +712,7 @@ object Vectors {
     val drift = nUp.toDouble / nBase
     val retrained = drift >= RetrainMinDrift
     val live = if (!retrained) v1
-    else ensureIndexDir(v2Key, "ivf_retrain") { out =>
+    else graft.OpCaches.once(spark, v2Key, "ivf_retrain") { out =>
       // retrain on what the index HOLDS: v1 membership (both generations)
       // joined back to the vector store for the payloads
       val members = spark.read.parquet(s"$v1/lists").select(col("vec_id"))

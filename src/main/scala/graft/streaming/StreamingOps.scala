@@ -1,6 +1,8 @@
 package graft.streaming
 
+import graft.OpCaches.scratch
 import graft.Tables
+import java.nio.file.Paths
 import java.sql.Timestamp
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
@@ -60,9 +62,11 @@ object StreamingOps {
   }
 
   /** Run a streaming frame to completion into a memory sink; return the
-    * materialized table. */
+    * materialized table. The sink's view holds the whole result in driver
+    * memory, so it is dropped at release. */
   private def runToTable(df: DataFrame, mode: OutputMode): DataFrame = {
     val name = nextSink()
+    graft.OpCaches.sinkView(df.sparkSession, name)
     val q = df.writeStream
       .format("memory")
       .queryName(name)
@@ -90,13 +94,12 @@ object StreamingOps {
   private def mergeDrain(agged: DataFrame, keys: Seq[String],
     stale: Option[(DataFrame, DataFrame) => DataFrame] = None): DataFrame = {
     val spark = agged.sparkSession
-    val out = java.nio.file.Files.createTempDirectory("merge_sink")
-      .toString + "/result"
+    val out = scratch(spark, "merge_sink") + "/result"
     val q = agged.writeStream
       .outputMode("update")
       .trigger(Trigger.AvailableNow())
       .option("checkpointLocation",
-        java.nio.file.Files.createTempDirectory("merge_ckpt").toString)
+        scratch(spark, "merge_ckpt"))
       .foreachBatch { (batch: DataFrame, _: Long) =>
         stale match {
           case Some(f) => MergeSink.merge(spark, batch, out)(f)
@@ -363,7 +366,7 @@ object StreamingOps {
     // to that state on a cloned session.
     val s = Tables.sizedSession(spark, 4)
     val reg = new CqRegistry(s,
-      java.nio.file.Files.createTempDirectory("cq_adhoc").toString,
+      scratch(spark, "cq_adhoc"),
       watermarkLag = BackfillLag)
     reg.create("CREATE CONTINUOUS QUERY cq_hourly ON graft BEGIN " +
       "SELECT mean(value) AS mv, count(value) AS n INTO hourly_means " +
@@ -406,7 +409,7 @@ object StreamingOps {
     * [[CqRegistry.runIntoStore]]'s per-batch keyed upsert. The read-back
     * equals the batch aggregation of the same body, which is the oracle. */
   def continuousQueryIntoStore(spark: SparkSession, dir: String): DataFrame = {
-    val root = java.nio.file.Files.createTempDirectory("cq_store").toString
+    val root = scratch(spark, "cq_store")
     // the CQ's state is buckets × series (hundreds of rows) — size the
     // stateful shuffle to THAT, not the session default: each state
     // partition is its own store instance with per-batch commit/snapshot
@@ -638,7 +641,7 @@ object StreamingOps {
     * covers both halves of the tee. Order-independent: max-version
     * collapse gives the same table under any micro-batch split. */
   def streamCqSubscription(spark: SparkSession, dir: String): DataFrame = {
-    val root = java.nio.file.Files.createTempDirectory("cq_sub").toString
+    val root = scratch(spark, "cq_sub")
     val s = Tables.sizedSession(spark, 4)
     val cat = new graft.influxql.MeasurementCatalog(s)
     cat.statement("CREATE DATABASE graft")
@@ -672,8 +675,7 @@ object StreamingOps {
     * path and bad rows to the quarantine dead-letter. */
   private[graft] def streamCsvIngestRun(spark: SparkSession, dir: String):
       (DataFrame, java.nio.file.Path, java.nio.file.Path, java.nio.file.Path) = {
-    import java.nio.file.Files
-    val landing = Files.createTempDirectory("landing")
+    val landing = Paths.get(scratch(spark, "landing"))
     graft.ops.Ingest.writePulseFiles(spark, dir, landing)
     // a file whose data rows are junk: parses to 2 quarantined rows, 0 good
     graft.ops.Ingest.writeFile(landing, "site99.csv",
@@ -685,9 +687,9 @@ object StreamingOps {
     graft.ops.Ingest.writeFile(landing, "broken_meta.csv",
       "Site unknown\nDatalogger unknown\nMeter unknown\nTime,Pulses\n" +
         "2024-01-01 00:00:00,7\n")
-    val archive = Files.createTempDirectory("landing_archive")
-    val goodDir = Files.createTempDirectory("ingest_good")
-    val quarantine = Files.createTempDirectory("ingest_quarantine")
+    val archive = Paths.get(scratch(spark, "landing_archive"))
+    val goodDir = Paths.get(scratch(spark, "ingest_good"))
+    val quarantine = Paths.get(scratch(spark, "ingest_quarantine"))
     val files = spark.readStream
       .option("wholetext", "true")
       .option("maxFilesPerTrigger", "1")
@@ -698,7 +700,7 @@ object StreamingOps {
     val q = files.writeStream
       .trigger(Trigger.AvailableNow())
       .option("checkpointLocation",
-        Files.createTempDirectory("ingest_ckpt").toString)
+        scratch(spark, "ingest_ckpt"))
       .foreachBatch { (batch: DataFrame, _: Long) =>
         val parsed = graft.ingest.CsvIngest.parsePulseText(batch).cache()
         try {
@@ -733,12 +735,12 @@ object StreamingOps {
     * fixture slice directly. */
   def streamLineprotoIngest(spark: SparkSession, dir: String): DataFrame = {
     import graft.ingest.LineProtocol
-    val landing = java.nio.file.Files.createTempDirectory("lp_stream_landing")
+    val landing = Paths.get(scratch(spark, "lp_stream_landing"))
     graft.ops.Ingest.writeLineProtoFile(spark, dir, landing)
     val store = new graft.store.MeasurementStore(spark,
-      java.nio.file.Files.createTempDirectory("lp_stream_store").toString)
+      scratch(spark, "lp_stream_store"))
     val quarantine =
-      java.nio.file.Files.createTempDirectory("lp_stream_quarantine").toString
+      scratch(spark, "lp_stream_quarantine")
     val q = spark.readStream
       .option("maxFilesPerTrigger", "1")
       .text(landing.toString)
@@ -746,7 +748,7 @@ object StreamingOps {
       .writeStream
       .trigger(Trigger.AvailableNow())
       .option("checkpointLocation",
-        java.nio.file.Files.createTempDirectory("lp_stream_ckpt").toString)
+        scratch(spark, "lp_stream_ckpt"))
       .foreachBatch { (batch: DataFrame, _: Long) =>
         val parsed = LineProtocol.tagCols(
           LineProtocol.parseLines(batch), Seq("siteID", "meterID"))
@@ -872,10 +874,11 @@ object StreamingOps {
     * arrive as a file stream and each micro-batch is assigned against the
     * frozen centroids (a tiny broadcast parquet read — the hierarchical
     * [[graft.ops.Vectors.assignCellsHier]] path) and APPENDED to the
-    * cid-partitioned lists with the next generation tag, via foreachBatch
-    * under the session index registry. Cross-batch equivalence to the
-    * one-shot upsert is structural — assignment is a pure per-vector
-    * function of the frozen quantizer and parquet append is add-only, so
+    * cid-partitioned lists with the next generation tag, via foreachBatch,
+    * into an index built once per session ([[graft.OpCaches.once]]).
+    * Cross-batch equivalence to the one-shot upsert is structural —
+    * assignment is a pure per-vector function of the frozen quantizer and
+    * parquet append is add-only, so
     * ANY shard split lands the same on-disk membership (split-invariance
     * spec-proven) — which is why the op shares the batch oracle verbatim:
     * DuckDB retrains from scratch and must reproduce the drained cells. */
@@ -888,8 +891,8 @@ object StreamingOps {
     val s = Tables.sizedSession(spark, 4)
     def withNrm(df: DataFrame): DataFrame = df.withColumn("nrm",
       sqrt(vecDot(s, col("embedding"), col("embedding"))))
-    val out = graft.ops.Vectors.ensureIndexDir(
-        dir + "#stream_upsert", "ivf_stream_upsert") { o =>
+    val out = graft.OpCaches.once(spark, dir + "#stream_upsert",
+        "ivf_stream_upsert") { o =>
       // glob batch read (not Tables.load): split specs land multiple
       // embeddings_<n>.parquet files — the build trains on the pre-shard
       // corpus of the SAME file set the stream drains
@@ -905,8 +908,7 @@ object StreamingOps {
         .filter(graft.ops.Vectors.isUpsertShard(col("vec_id")))
       val q = shards.writeStream
         .trigger(Trigger.AvailableNow())
-        .option("checkpointLocation", java.nio.file.Files
-          .createTempDirectory("stream_upsert_ckpt").toString)
+        .option("checkpointLocation", scratch(spark, "stream_upsert_ckpt"))
         .foreachBatch { (batch: DataFrame, _: Long) =>
           if (!batch.isEmpty)
             graft.ops.Vectors.upsertAppendBatch(s, withNrm(batch), o)

@@ -109,7 +109,7 @@ class AdminSpec extends SparkTestBase {
     val d = cat.statement("SHOW DIAGNOSTICS")
       .as[(String, String, String)].collect()
       .map { case (_, n, v) => n -> v }.toMap
-    // the test session runs 4 shuffle partitions (not the gate's 32) —
+    // the test session runs 4 shuffle partitions (the mains run one per core) —
     // proving the statement reads the session, not a constant
     assert(d("shuffle_partitions") ===
       spark.conf.get("spark.sql.shuffle.partitions"))

@@ -270,10 +270,20 @@ class ExtensionSpec extends SparkTestBase {
     // reused the first op's persisted index instead of retraining
     assert(ops.Vectors.ivfBuildCount == before + 1)
     assert(new java.io.File(s"$dir/lists").isDirectory)
+    // the band index and the JSONL landing are session-scoped the same
+    // way: built once, reused, gone after the one session release
+    val bands = ops.Dedup.bandIndexBuildCount
+    ops.Dedup.dedupIndexBuild(spark, sf).collect()
+    ops.Dedup.dedupIncremental(spark, sf).collect()
+    assert(ops.Dedup.bandIndexBuildCount == bands + 1)
+    ops.Ingest.scanJsonlCorpus(spark, sf).collect()
+    ops.Ingest.sinkJsonlQuarantine(spark, sf).collect()
+    val built = Seq(dir, OpCaches.onceDir(sf + "#band").get,
+      OpCaches.onceDir(sf + "#jsonl").get)
+    built.foreach(d => assert(new java.io.File(d).list().nonEmpty, d))
     ops.Vectors.releaseIndexes()
-    assert(!new java.io.File(dir).exists(),
-      s"release left the persisted index behind: $dir")
-    OpCaches.releaseAll()
+    built.foreach(d => assert(!new java.io.File(d).exists(),
+      s"release left a session-scoped build behind: $d"))
   }
 
   test("index upsert: old list files byte-untouched, only the shard " +

@@ -67,7 +67,8 @@ class Round15Spec extends SparkTestBase {
       "1234 5'6 a1 ''",                    // digit tokens, mixed
       "  - bullet\n\t* star\n• dot\nx- no",  // ^\s*[-*•] incl. U+2022
       "•no-space bullet",             // bullet with no leading ws
-      " \t\f\r- all five ws kinds",  // Java \s class members
+      " \t\u000B\f\r- all five ws kinds",  // Java \s class members
+      "\u000B- vt bullet",                 // \x0B alone: Java \s, not RE2's
       "ends...\nnot..\n....\n.....\n......",  // ell lines + dot runs 4,5,6
       "...",                               // whole text one ellipsis line
       "a#b##c### #",                       // hash runs
